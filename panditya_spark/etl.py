@@ -442,18 +442,11 @@ def etext_nested_mapping(links: DataFrame, counts: DataFrame) -> dict:
     list; plus the two count dicts (zero-filled for all known
     collections). Driver-side dict shaping happens at the serving
     boundary, after the heavy lifting aggregated in Spark."""
-    grouped = (
+    mapping = fold_nested_links(
         links.groupBy("work_id", "collection", "subtype")
         .agg(F.array_sort(F.collect_set("url")).alias("urls"))
         .collect()
     )
-    mapping: dict = {}
-    for r in grouped:
-        mapping.setdefault(r.work_id, {}).setdefault(r.collection, {})[r.subtype] = list(r.urls)
-    for wid, colls in mapping.items():
-        for cname, subtypes in list(colls.items()):
-            if len(subtypes) == 1:
-                colls[cname] = next(iter(subtypes.values()))
     totals = dict.fromkeys(COLLECTION_SUBTYPE_LABELS, 0)
     missing = dict.fromkeys(COLLECTION_SUBTYPE_LABELS, 0)
     for r in counts.collect():
@@ -464,3 +457,17 @@ def etext_nested_mapping(links: DataFrame, counts: DataFrame) -> dict:
         "collection_total_link_counts": totals,
         "collection_missing_work_id_counts": missing,
     }
+
+
+def fold_nested_links(grouped) -> dict:
+    """(work_id, collection, subtype, urls) rows → work_id → collection
+    → (url list | subtype → url list), single-subtype collections
+    flattened to the bare list (transform.py:242-244)."""
+    mapping: dict = {}
+    for r in grouped:
+        mapping.setdefault(r.work_id, {}).setdefault(r.collection, {})[r.subtype] = list(r.urls)
+    for colls in mapping.values():
+        for cname, subtypes in list(colls.items()):
+            if len(subtypes) == 1:
+                colls[cname] = next(iter(subtypes.values()))
+    return mapping

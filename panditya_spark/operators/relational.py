@@ -14,9 +14,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def spread_small_input(
-    df: DataFrame, bytes_per_task: int | None = None
-) -> DataFrame:
+def spread_small_input(df: DataFrame) -> DataFrame:
     """Round-robin repartition ONLY when the scan has fewer splits than
     the cluster has cores. A small table in one parquet file otherwise
     runs any CPU-heavy per-row stage downstream (shingling, mapInPandas
@@ -25,36 +23,12 @@ def spread_small_input(
     and this is a no-op — the guard keeps the repartition from becoming
     a pointless full shuffle there. File count is a metadata-only proxy
     for scan splits (df.rdd would compile a Python-RDD conversion plan
-    just to ask for the partition count).
-
-    bytes_per_task (r17, guide §2.5 — partitions sized by data, not
-    core count): when the downstream per-row work is CHEAP relative to
-    the bytes (a vectorized Arrow stage, not a codec), a full
-    core-count spread pays one Python worker handshake per core for
-    micro-batches of rows. Passing the stage's measured appetite caps
-    the spread at ceil(source_bytes / bytes_per_task), floor 2 — so a
-    10 MB table fans to a few tasks locally and the cap saturates at
-    the core count as volume grows. Callers whose per-row cost dwarfs
-    bytes (PNG/WAV codecs, shingling) keep the default full spread."""
+    just to ask for the partition count)."""
     target = df.sparkSession.sparkContext.defaultParallelism
     try:
-        files = df.inputFiles()
-        n_splits = len(files)
+        n_splits = len(df.inputFiles())
     except Exception:  # non-file source (memory, stream) — leave as-is
         return df
-    if bytes_per_task:
-        import os
-
-        total = 0
-        for f in files:
-            p = f[7:] if f.startswith("file://") else f
-            try:
-                total += os.path.getsize(p)
-            except OSError:
-                total = 0
-                break
-        if total > 0:
-            target = max(2, min(target, -(-total // bytes_per_task)))
     if 0 < n_splits < target:
         return df.repartition(target)
     return df

@@ -1,31 +1,44 @@
 """Serving layer: the reference's API surface (SURVEY §3) composed
 from engine operators. Each function returns the exact response shape
-of the corresponding Flask endpoint; heavy lifting stays in DataFrames,
-dict shaping happens at the collect() boundary exactly as the
-reference's jsonify boundary.
+of the corresponding Flask endpoint; dict shaping happens at the
+collect() boundary exactly as the reference's jsonify boundary.
 
 Flagship: subgraph_response == POST /api/graph/subgraph
 (flask_app.py:183-252): validate → k-hop BFS with exclusion
 (grapher.py:25-94) → annotate (grapher.py:118-137) → per-type node
 projection + edge relationship phrases → response dict.
+
+A served subgraph is at most SERVING_MAX_ROWS nodes, so its BFS state
+is small by construction and lives on the driver (the Pregelix rule:
+pick the physical plan by the active-vertex count). The visited map
+and the frontier are Python values; each hop is one bounded collect of
+the edges touching the frontier, and three more bounded collects fetch
+the node projection, the e-text rows and the induced edges, so a
+1-hop request is a handful of Spark jobs (7 on the perfbench serve
+catalog) with no per-request adjacency build or checkpoint. Id sets
+reach the JVM as one JSON literal (_in_ids), never spliced into SQL
+text.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import json
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from panditya_spark.etl import fold_nested_links
 from panditya_spark.functions.labels import date_info, edge_relationship
-from panditya_spark.operators.graph import khop_bfs
 
 # Serving-boundary row cap (VERDICT r8 #4): every response path here
-# collects the final frame into the driver — correct reference parity
-# (the jsonify boundary, SURVEY §3.1), but at 100× a hub-seeded 3-hop
-# subgraph can pull millions of rows into driver memory. The cap turns
-# that from an OOM into a clear client-side error. Probed with
-# limit(cap+1) so the engine never computes more than cap+1 rows of an
-# over-cap result (TakeOrderedAndProject-class early exit, not a full
-# materialize-then-count).
+# collects into the driver — correct reference parity (the jsonify
+# boundary, SURVEY §3.1), but at 100× a hub-seeded 3-hop subgraph can
+# pull millions of rows into driver memory. The cap turns that from an
+# OOM into a clear client-side error. Collects probe limit(cap+1), so
+# the engine never computes more than cap+1 rows of an over-cap result.
+# The subgraph BFS frontier is held on the driver under the same cap:
+# the visited count is checked after every hop, so an over-cap request
+# stops at the hop that crosses the cap.
 import os as _os
 
 SERVING_MAX_ROWS = int(_os.environ.get("SPARK_GRAFT_SERVING_MAX_ROWS", "100000"))
@@ -33,6 +46,14 @@ SERVING_MAX_ROWS = int(_os.environ.get("SPARK_GRAFT_SERVING_MAX_ROWS", "100000")
 
 class ServingCapExceeded(ValueError):
     """A serving response would exceed SERVING_MAX_ROWS collected rows."""
+
+
+def _cap_exceeded(what: str, cap: int) -> ServingCapExceeded:
+    return ServingCapExceeded(
+        f"{what} too large: more than {cap} rows at the serving "
+        "boundary (raise SPARK_GRAFT_SERVING_MAX_ROWS or narrow the "
+        "request)"
+    )
 
 
 def _bounded_collect(df: DataFrame, what: str, cap: int | None = None) -> list:
@@ -43,12 +64,22 @@ def _bounded_collect(df: DataFrame, what: str, cap: int | None = None) -> list:
     cap = SERVING_MAX_ROWS if cap is None else cap
     rows = df.limit(cap + 1).collect()
     if len(rows) > cap:
-        raise ServingCapExceeded(
-            f"{what} too large: more than {cap} rows at the serving "
-            "boundary (raise SPARK_GRAFT_SERVING_MAX_ROWS or narrow the "
-            "request)"
-        )
+        raise _cap_exceeded(what, cap)
     return rows
+
+
+def _json_lit(value, ddl: str) -> Column:
+    """A Python list/dict as one typed literal column: a single JSON
+    string parsed by from_json (constant-folded by the optimizer). Any
+    number of values crosses to the JVM in a constant number of py4j
+    calls — Column.isin makes one call per value — and no value is
+    ever spliced into SQL text, so user-supplied ids cannot inject."""
+    return F.from_json(F.lit(json.dumps(value)), ddl)
+
+
+def _in_ids(col: Column, ids) -> Column:
+    """col ∈ ids, exact string membership."""
+    return F.array_contains(_json_lit(list(ids), "array<string>"), col)
 
 
 def validate_subgraph_inputs(authors, works, hops, exclude_list):
@@ -62,6 +93,37 @@ def validate_subgraph_inputs(authors, works, hops, exclude_list):
     return None
 
 
+def _frontier_bfs(
+    edges: DataFrame, center: list[str], hops: int, exclude: set[str]
+) -> dict[str, int]:
+    """node → dist for the undirected k-hop ball around center, in BFS
+    order. Excluded nodes are visited but never expanded
+    (grapher.py:48-50). Each hop is one bounded collect of the edges
+    touching the expandable frontier; every such edge ends inside the
+    final node set, so its cap is never tighter than the induced-edge
+    collect's."""
+    dist = dict.fromkeys(center, 0)
+    frontier = center
+    for depth in range(1, hops + 1):
+        expand = {n for n in frontier if n not in exclude}
+        if not expand:
+            break
+        touching = _bounded_collect(
+            edges.filter(_in_ids(F.col("src"), expand) | _in_ids(F.col("dst"), expand))
+            .select("src", "dst"),
+            "subgraph edge set",
+        )
+        frontier = []
+        for src, dst in touching:
+            for a, b in ((src, dst), (dst, src)):
+                if a in expand and b not in dist:
+                    dist[b] = depth
+                    frontier.append(b)
+        if len(dist) > SERVING_MAX_ROWS:
+            raise _cap_exceeded("subgraph node set", SERVING_MAX_ROWS)
+    return dist
+
+
 def subgraph_response(
     entities: DataFrame,
     edges: DataFrame,
@@ -73,34 +135,18 @@ def subgraph_response(
 ) -> dict:
     """Full §3.1 lifecycle. entities/edges come from etl.py;
     etext_links is the (work_id, collection, subtype, url) long table
-    or None. Returns the flask_app.py:233-245 response dict."""
-    spark = entities.sparkSession
-    authors = list(dict.fromkeys(authors))
-    works = list(dict.fromkeys(works))
-    exclude_list = list(set(exclude_list or []))
+    or None. Returns the flask_app.py:233-245 response dict, nodes in
+    BFS order."""
+    exclude_list = [] if exclude_list is None else exclude_list
     err = validate_subgraph_inputs(authors, works, hops, exclude_list)
     if err is not None:
         return err
-
-    center = list(set(authors) | set(works))
-    seeds = spark.createDataFrame([(c,) for c in center], ["node"])
-    exclude_df = (
-        spark.createDataFrame([(x,) for x in exclude_list], ["node"])
-        if exclude_list
-        else None
-    )
-    nodes, sub_edges = khop_bfs(edges, seeds, hops, exclude=exclude_df)
-
-    # Unknown seed ids → the reference raises KeyError → 400.
-    # One left-anti probe: non-empty ⇒ some subgraph node lacks an
-    # entity row; the first one names the error.
-    unknown = (
-        nodes.join(entities.select(F.col("id").alias("node")), "node", "left_anti")
-        .limit(1)
-        .collect()
-    )
-    if unknown:
-        return {"error": f"Invalid ID: '{unknown[0][0]}'"}
+    authors = list(dict.fromkeys(authors or []))
+    works = list(dict.fromkeys(works or []))
+    exclude_list = list(set(exclude_list))
+    excluded = set(exclude_list)
+    center = list(dict.fromkeys(authors + works))
+    dist = _frontier_bfs(edges, center, hops, excluded)
 
     dates = date_info(
         F.col("type"),
@@ -109,52 +155,44 @@ def subgraph_response(
         F.col("author_lowest_year"),
         F.col("author_highest_year"),
     )
-    annotated = (
-        nodes.join(entities, nodes.node == entities.id)
-        .select(
-            "node",
-            F.col("name").alias("label"),
-            "type",
-            "aka",
-            F.when(F.col("type") == "author", F.col("social_identifiers")).alias("social_ids"),
-            dates.alias("dates"),
-            F.when(F.col("type") == "work", F.col("discipline")).alias("discipline"),
-            F.when(F.col("type") == "author", F.col("disciplines")).alias("disciplines"),
-            F.col("node").isin(center).alias("is_central"),
-            F.col("node").isin(exclude_list).alias("is_excluded")
-            if exclude_list
-            else F.lit(False).alias("is_excluded"),
+    by_id = {
+        r.id: r
+        for r in _bounded_collect(
+            entities.filter(_in_ids(F.col("id"), dist)).select(
+                "id",
+                F.col("name").alias("label"),
+                "type",
+                "aka",
+                F.when(F.col("type") == "author", F.col("social_identifiers")).alias("social_ids"),
+                dates.alias("dates"),
+                F.when(F.col("type") == "work", F.col("discipline")).alias("discipline"),
+                F.when(F.col("type") == "author", F.col("disciplines")).alias("disciplines"),
+            ),
+            "subgraph node set",
         )
-    )
+    }
+    # Unknown ids (a bad seed, or a dangling id the BFS reached) → the
+    # reference raises KeyError → 400, naming the first one.
+    unknown = next((n for n in dist if n not in by_id), None)
+    if unknown is not None:
+        return {"error": f"Invalid ID: '{unknown}'"}
 
     # e-text annotation (J7): nested per-work shape from the long table.
-    links_by_work: dict[str, dict] = {}
-    if etext_links is not None:
-        from panditya_spark.etl import etext_nested_mapping
-
-        sub_links = etext_links.join(
-            nodes.withColumnRenamed("node", "work_id"), "work_id", "left_semi"
-        )
-        grouped = _bounded_collect(
-            sub_links.groupBy("work_id", "collection", "subtype").agg(
-                F.array_sort(F.collect_set("url")).alias("urls")
-            ),
+    links_by_work = (
+        _nested_links(
+            etext_links.filter(_in_ids(F.col("work_id"), dist)),
             "subgraph e-text annotation",
         )
-        for r in grouped:
-            links_by_work.setdefault(r.work_id, {}).setdefault(r.collection, {})[
-                r.subtype
-            ] = list(r.urls)
-        for wid, colls in links_by_work.items():
-            for cname, subtypes in list(colls.items()):
-                if len(subtypes) == 1:
-                    colls[cname] = next(iter(subtypes.values()))
-
+        if etext_links is not None
+        else {}
+    )
+    center_set = set(center)
     filtered_nodes = []
-    for r in _bounded_collect(annotated, "subgraph node set"):
+    for n in dist:
+        r = by_id[n]
         filtered_nodes.append(
             {
-                "id": r.node,
+                "id": n,
                 "label": r.label,
                 "type": r.type,
                 "aka": r.aka,
@@ -162,22 +200,21 @@ def subgraph_response(
                 "dates": r.dates,
                 "discipline": r.discipline,
                 "disciplines": r.disciplines,
-                "is_central": bool(r.is_central),
-                "is_excluded": bool(r.is_excluded),
+                "is_central": n in center_set,
+                "is_excluded": n in excluded,
                 # reference uses False (not None) for works without links
-                "etext_links": links_by_work.get(r.node, False),
+                "etext_links": links_by_work.get(n, False),
             }
         )
 
-    src_t = entities.select(F.col("id").alias("src"), F.col("type").alias("src_type"))
-    dst_t = entities.select(F.col("id").alias("dst"), F.col("type").alias("dst_type"))
+    # Induced edges, typed from the node projection: one id → type map
+    # literal both restricts the edges to the node set and feeds the
+    # relationship phrase.
+    types = _json_lit({n: by_id[n].type for n in dist}, "map<string,string>")
+    src_t, dst_t = types[F.col("src")], types[F.col("dst")]
     typed_edges = _bounded_collect(
-        sub_edges.join(F.broadcast(src_t), "src")
-        .join(F.broadcast(dst_t), "dst")
-        .select(
-            "src",
-            "dst",
-            edge_relationship(F.col("src_type"), F.col("dst_type")).alias("rel"),
+        edges.filter(src_t.isNotNull() & dst_t.isNotNull()).select(
+            "src", "dst", edge_relationship(src_t, dst_t).alias("rel")
         ),
         "subgraph edge set",
     )
@@ -196,27 +233,19 @@ def subgraph_response(
     }
 
 
-def _nested_links(links: DataFrame) -> dict:
+def _nested_links(links: DataFrame, what: str = "e-text link mapping") -> dict:
     """work_id → collection → (sorted url list | subtype → sorted url
     list), single-subtype collections flattened to the bare list — the
     ETEXT_LINKS value shape (transform.py:246-270). Aggregation in
     Spark, dict fold at the collect boundary."""
-    grouped = _bounded_collect(
-        links.groupBy("work_id", "collection", "subtype").agg(
-            F.array_sort(F.collect_set("url")).alias("urls")
-        ),
-        "e-text link mapping",
-    )
-    mapping: dict = {}
-    for r in grouped:
-        mapping.setdefault(r.work_id, {}).setdefault(r.collection, {})[r.subtype] = list(
-            r.urls
+    return fold_nested_links(
+        _bounded_collect(
+            links.groupBy("work_id", "collection", "subtype").agg(
+                F.array_sort(F.collect_set("url")).alias("urls")
+            ),
+            what,
         )
-    for colls in mapping.values():
-        for cname, subtypes in list(colls.items()):
-            if len(subtypes) == 1:
-                colls[cname] = next(iter(subtypes.values()))
-    return mapping
+    )
 
 
 def valid_collections(links: DataFrame) -> list[str]:
@@ -321,12 +350,12 @@ def by_work_response(links: DataFrame, entities: DataFrame, ids_param: str | Non
     valid_ids = {
         r.id
         for r in entities.filter(
-            (F.col("type") == "work") & F.col("id").isin(ids)
+            (F.col("type") == "work") & _in_ids(F.col("id"), ids)
         ).select("id").collect()
     }
     if not valid_ids:
         return {"error": "No valid work IDs provided"}
-    return _nested_links(links.filter(F.col("work_id").isin(list(valid_ids))))
+    return _nested_links(links.filter(_in_ids(F.col("work_id"), valid_ids)))
 
 
 def visualize_collection_params(
@@ -340,7 +369,7 @@ def visualize_collection_params(
         return works_data
     works = list(works_data.keys())
     author_rows = _bounded_collect(
-        entities.filter(F.col("id").isin(works))
+        entities.filter(_in_ids(F.col("id"), works))
         .select(F.explode_outer("author_ids").alias("aid"))
         .filter(F.col("aid").isNotNull())
         .distinct(),
@@ -364,7 +393,7 @@ def entity_labels_response(entities: DataFrame, ids: list[str]) -> dict:
     if any(not re.fullmatch(r"[\d,]*", i) for i in ids):
         return {"error": "invalid id format"}
     rows = _bounded_collect(
-        entities.filter(F.col("id").isin(ids)).select(
+        entities.filter(_in_ids(F.col("id"), ids)).select(
             "id", F.col("name").alias("label")
         ),
         "entity label set",
