@@ -66,6 +66,10 @@ def _source_file_bytes(df: DataFrame) -> int | None:
     return total if total > 0 else None
 
 
+# Decompressed loop input per reduce partition (see _loop_shuffle_scope).
+_LOOP_SHUFFLE_TARGET_BYTES = 8 << 20
+
+
 def _loop_shuffle_scope(spark: SparkSession, est_bytes: int | None):
     """Volume-derived shuffle partitioning for an iterative loop
     (guide §2.2: size partitions by data, never by core count).
@@ -93,12 +97,9 @@ def _loop_shuffle_scope(spark: SparkSession, est_bytes: int | None):
     (its propagation aggregate is CPU-bound at ~2x|E| rows/round), so
     the SCC loop deliberately does not use this scope.
 
-    Local default target 8 MB of (decompressed) loop input per reduce
-    partition — env-tunable; a production deployment over TB-scale
-    loops would raise PANDITYA_LOOP_SHUFFLE_TARGET_MB toward the
-    64-256 MB advisory range of guide §2.2/§9, but the clamp to the
-    session ceiling already dominates there."""
-    import os
+    Target: _LOOP_SHUFFLE_TARGET_BYTES of (decompressed) loop input per
+    reduce partition. At TB-scale loops the clamp to the session
+    ceiling dominates, so the constant only matters at small inputs."""
     from contextlib import contextmanager
 
     @contextmanager
@@ -112,14 +113,10 @@ def _loop_shuffle_scope(spark: SparkSession, est_bytes: int | None):
         if est_bytes is None:
             yield
             return
-        target_mb = int(os.environ.get("PANDITYA_LOOP_SHUFFLE_TARGET_MB", "8"))
-        if target_mb <= 0:  # 0 disables the scope (A/B escape hatch)
-            yield
-            return
         # Parquet zstd/snappy on these string-keyed tables decompresses
         # ~3x; the estimate feeds a clamp, so precision is not load-bearing.
         est = est_bytes * 3
-        parts = max(1, min(cur, -(-est // (target_mb << 20))))
+        parts = max(1, min(cur, -(-est // _LOOP_SHUFFLE_TARGET_BYTES)))
         if parts >= cur:
             yield
             return
@@ -194,33 +191,50 @@ def _release(df: DataFrame | None) -> None:
         pass  # not a localCheckpoint plan: nothing pinned
 
 
+def _probed(df: DataFrame, probes: tuple[Column, ...]):
+    """Attach aggregate `probes` to the next action over `df` as
+    observe() metrics: a task-side side effect of that action, with no
+    extra exchange and no extra job. Returns (observed df, fetch);
+    fetch() returns the raw aggregate values once the action has run."""
+    if not probes:
+        return df, lambda: ()
+    from pyspark.sql import Observation
+
+    obs = Observation()
+    names = [f"_p{i}" for i in range(len(probes))]
+    df = df.observe(obs, *(p.alias(n) for p, n in zip(probes, names)))
+    return df, lambda: tuple(obs.get[n] for n in names)
+
+
 class _LoopState:
-    """Per-round materialization manager for iterative DataFrame loops.
+    """The round protocol of the iterative DataFrame loops.
 
-    Every step localCheckpoints (eager): the logical plan is cut to a
-    LogicalRDD each round, which is essential — loop bodies reference
-    the previous state twice (e.g. depth ⋈ improved(depth)), so an
-    uncut plan TREE doubles per round and analysis/treeString walks
-    explode exponentially. Cache() alone does not cut the logical plan.
+    Materialise: `round_end(*dfs, probes=...)` finishes a round with
+    every live state frame. Each frame not yet materialised this round
+    is cut to an eager localCheckpoint — loop bodies reference the
+    previous state more than once, so an uncut plan tree doubles per
+    round, and cache() alone does not cut the logical plan.
 
-    Every `period`-th step spills to parquet instead: Dataset
-    checkpoints carry the optimized plan's Statistics, and the
-    size-only visitor multiplies children's sizeInBytes, so the carried
-    BigInt doubles in bit-length per round — a parquet scan resets it
-    to the true file size, bounding the growth to 2^period (~trivial).
-    On a cluster the spill dir would be HDFS/S3 — the standard
-    reliable-checkpoint cadence of any iterative Spark job.
+    Observe: `probes` are aggregate Columns over the FIRST frame. They
+    ride that frame's materialising action as observe() metrics, so a
+    per-round scalar (fixpoint flag, active count, norm) costs no job
+    of its own; their raw values come back after the frames.
 
-    Cleanup (unpersist/delete) is delayed by one full spill
-    generation: a lazy DataFrame built in the current window may still
-    reference state from one generation back, but never older — each
-    round builds only on the previous round's outputs.
+    Spill cadence: every `period`-th round writes every frame through a
+    parquet roundtrip (_checkpoint) instead. A localCheckpoint carries
+    the optimized plan's Statistics and the size-only visitor
+    multiplies children's sizeInBytes, so the carried BigInt doubles in
+    bit-length per round; the parquet scan resets it to the true file
+    size. All live frames must spill in the same round: a chain that
+    never passes a spill keeps compounding and OOMs the driver.
+    Superseded checkpoints are freed one spill generation late — a
+    lazy frame built in the current window may still read state from
+    one generation back, never older.
 
-    The parquet boundary MUST spill every live state DataFrame in the
-    same round: a chain that never passes through a spill (e.g. the
-    changed-frontier chain while only `depth` gets spilled) keeps
-    compounding carried stats and OOMs after ~45 rounds regardless of
-    the other chain's resets."""
+    Cap: `rounds(max_iter, what)` yields the round indices and raises
+    RuntimeError when the loop asks for a round past the cap, so a
+    non-fixpoint result never returns silently. A loop that breaks on
+    its last round does not raise."""
 
     def __init__(self, period: int = 8):
         self.period = period
@@ -238,91 +252,30 @@ class _LoopState:
         self._seen.add(id(out))
         return out
 
-    def round_end(self, *dfs: DataFrame) -> list[DataFrame]:
-        """Finish a round with ALL live state DataFrames. Every
-        `period`-th round all of them are spilled to parquet (stats
-        reset) and stale state from two generations back is freed."""
+    def round_end(self, *dfs: DataFrame, probes: tuple[Column, ...] = ()) -> tuple:
+        """Finish a round: returns the materialised frames followed by
+        the raw value of each probe (aggregates over dfs[0])."""
+        first, fetch = _probed(dfs[0], probes)
+        dfs = (first, *dfs[1:])
         self._round += 1
         if self._round % self.period == 0:
             out = [_checkpoint(d) for d in dfs]
-            for c in self._old_window:
+            for c in self._old_window + self._old_spilled:
                 _release(c)
-            for s in self._old_spilled:
-                _release(s)
             self._old_window, self._window = self._window, []
             self._old_spilled, self._spilled = self._spilled, list(out)
             self._seen = {id(d) for d in out}
         else:
             out = [d if id(d) in self._seen else self.minor(d) for d in dfs]
-        return out
+        return (*out, *fetch())
 
-    def round_end_probe(
-        self,
-        df: DataFrame,
-        flag_col: str,
-        probe: Column | None = None,
-        extra: Column | None = None,
-    ) -> tuple:
-        """Finish a round with ONE state DataFrame and answer "is any
-        row's boolean `flag_col` set" in the SAME Spark job: the state
-        is marked for a LAZY localCheckpoint and the max(flag)
-        aggregate is the action that materializes it — one job per
-        round instead of an eager checkpoint plus a separate probe
-        scan (VERDICT r5 'What's wrong #3'). On the parquet-spill
-        cadence the write is its own job and the probe is a cheap
-        aggregate over the fresh file scan.
-
-        probe: optional custom aggregate Column (e.g. F.max("dist"))
-        evaluated instead of max(flag_col); its RAW value is returned
-        so callers can fold any per-round scalar probe into the same
-        materializing job (the r16 job-count fusion).
-
-        extra: optional SECOND aggregate Column riding the same
-        observe() — when given, the return becomes a 3-tuple
-        (state, probe_value, extra_value). Loop callers use it for
-        free per-round cardinalities (broadcast gates, partition
-        sizing) that would otherwise cost a count() job (r17).
-
-        r16 rework (guide §1.2 — remove passes): the probe is now an
-        `observe()` metric, computed as a task-side side effect of the
-        SAME action that materializes the round (the eager checkpoint
-        or the parquet spill write). The earlier lazy-checkpoint +
-        max-aggregate shape still paid one extra exchange and, under
-        AQE, an extra job per round; CollectMetrics adds neither (no
-        exchange, no job — measured: probe delivery < 1 ms after the
-        checkpoint job)."""
-        from pyspark.sql import Observation
-
-        agg_expr = (
-            probe if probe is not None else F.max(F.col(flag_col))
-        ).alias("probe")
-        aggs = [agg_expr]
-        if extra is not None:
-            aggs.append(extra.alias("_extra"))
-        obs = Observation()
-        df = df.observe(obs, *aggs)
-        self._round += 1
-        if self._round % self.period == 0:
-            out = _checkpoint(df)
-        else:
-            out = df.localCheckpoint(eager=True)
-        metrics = obs.get
-        flag = metrics["probe"]
-        if self._round % self.period == 0:
-            for c in self._old_window:
-                _release(c)
-            for s in self._old_spilled:
-                _release(s)
-            self._old_window, self._window = self._window, []
-            self._old_spilled, self._spilled = self._spilled, [out]
-            self._seen = {id(out)}
-        else:
-            self._window.append(out)
-            self._seen.add(id(out))
-        probe_val = flag if probe is not None else bool(flag)
-        if extra is not None:
-            return out, probe_val, metrics["_extra"]
-        return out, probe_val
+    @staticmethod
+    def rounds(max_iter: int, what: str):
+        """Round indices 0..max_iter-1; asking for one more raises."""
+        yield from range(max_iter)
+        raise RuntimeError(
+            f"{what}: no fixpoint after {max_iter} rounds; raise the round cap"
+        )
 
     def finish(self, *keep: DataFrame) -> None:
         """Release every checkpoint this loop produced except the ones
@@ -413,15 +366,10 @@ def khop_bfs(
                 .withColumn("dist", F.lit(depth))
             )
             # max(dist) == depth ⇔ this hop added at least one node; the
-            # probe rides the same job that materializes the round (the
-            # round_end_probe fusion — one job per hop instead of
-            # checkpoint + isEmpty); the visited count rides it too and
-            # feeds the next hop's broadcast gate.
-            visited, max_dist, n_cnt = state.round_end_probe(
-                visited.union(nxt),
-                "dist",
-                probe=F.max("dist"),
-                extra=F.count(F.lit(1)),
+            # visited count feeds the next hop's broadcast gate. Both
+            # ride the round's materialising job.
+            visited, max_dist, n_cnt = state.round_end(
+                visited.union(nxt), probes=(F.max("dist"), F.count(F.lit(1)))
             )
             n_visited = int(n_cnt or 0)
             if max_dist is None or max_dist < depth:
@@ -467,9 +415,11 @@ def connected_components(
     Returns (node, component) where component = min node id (string
     comparison if ids are strings) in the component. Each round joins
     the current labels across edges and takes the min of neighbor
-    labels; converges in O(diameter) rounds (the reference graph's
-    diameter is ~27 per offline_mode.md; cap guards pathological
-    inputs). Labels are checkpointed per round to keep lineage flat.
+    labels; pointer jumping converges in O(log diameter) rounds (the
+    reference graph's diameter is ~27 per offline_mode.md). Reaching
+    max_iter before the fixpoint raises RuntimeError instead of
+    returning non-fixpoint labels. Labels are checkpointed per round to
+    keep lineage flat.
 
     At 100 TB scale the round count, not data volume, dominates; the
     min-label join is a plain shuffle-hash join that AQE handles, and a
@@ -507,13 +457,12 @@ def connected_components(
     # label over the neighborhood, then (2) L(v) ← L(L(v)) — following
     # the label as a parent pointer. Step 2 doubles the propagation
     # distance per round, so convergence is O(log diameter) rounds, not
-    # O(diameter): plain min-label propagation silently returned WRONG
-    # results on a 60-node path (needs 60 rounds, cap was 50). At
-    # billion-edge scale the round count is what dominates wall-clock,
-    # so log-rounds is also the 100 TB-safe design.
+    # O(diameter). At billion-edge scale the round count is what
+    # dominates wall-clock, so log-rounds is also the 100 TB-safe
+    # design. A cap reached before the fixpoint raises.
     # One materialization per round: carry the old label through the
-    # round and emit a `changed` flag, so convergence is a cheap scan of
-    # the checkpointed output rather than a separate compare join.
+    # round and emit a `changed` flag, so convergence is a probe on the
+    # round's materialising job rather than a separate compare join.
     # Δ-messaging: only labels that changed last round send min-label
     # messages to their neighbors (Pregel vote-to-halt semantics), so
     # the edge-wide join touches Δ's neighborhood, not all E, from
@@ -613,31 +562,18 @@ def connected_components(
     bcast_cap = _broadcast_edge_cap(edges.sparkSession) // 2
     n_nodes: int | None = None
     with _loop_shuffle_scope(edges.sparkSession, est and est * 2):
-        import os as _os
-
-        cand_ckpt = _os.environ.get("PANDITYA_CC_CAND_CKPT", "1") == "1"
-        for it in range(max_iter):
+        for it in state.rounds(max_iter, "connected_components"):
             bcast = n_nodes is not None and n_nodes <= bcast_cap
-            cand = cand_plan(labels, use_delta=it >= 1, bcast=bcast)
-            if cand_ckpt:
-                # The pointer jump references cand twice, so a lazy
-                # cand runs the und-join + min-agg subtree TWICE per
-                # round; the minor checkpoint trades one O(V) frame
-                # materialization for computing the O(E) half once —
-                # the dominant term at scale (r17). Paired sf0.1 A/B:
-                # <= the lazy shape in 6/8 pairs, equal at quiet floor
-                # (the lazy shape's duplicated work is cheap at 330k
-                # edges; the gap widens with |E|). Env knob 0 restores
-                # the one-job-per-round r16 shape for replay.
-                cand = state.minor(cand)
-            # Materialization and the any-changed fixpoint probe share
-            # one job (round_end_probe): the former round_end + isEmpty
-            # pair was two jobs per round at ~150 ms fixed cost each
-            # (r16).
-            labels, any_changed, n_cnt = state.round_end_probe(
+            # The pointer jump references cand twice, so a lazy cand
+            # would run the und-join + min-agg subtree twice per round;
+            # the minor checkpoint trades one O(V) materialization for
+            # computing the O(E) half once — the dominant term at scale.
+            cand = state.minor(cand_plan(labels, use_delta=it >= 1, bcast=bcast))
+            # The any-changed fixpoint flag and the label count ride
+            # the round's materialising job.
+            labels, any_changed, n_cnt = state.round_end(
                 _pointer_jump(cand, bcast),
-                "changed",
-                extra=F.count(F.lit(1)),
+                probes=(F.max("changed"), F.count(F.lit(1))),
             )
             n_nodes = int(n_cnt or 0)
             if not any_changed:
@@ -670,7 +606,9 @@ def longest_chain_depth(edges: DataFrame, max_iter: int = 64) -> DataFrame:
 
     Returns (node, chain_depth) where a leaf has depth 0; roots (no
     incoming edge) carry the max chain. max_iter is the cycle guard
-    standing in for the reference's visited-set.
+    standing in for the reference's visited-set: a loop that reaches it
+    before its fixpoint raises RuntimeError instead of returning
+    truncated depths.
 
     Two physical strategies, picked by a one-pass degree probe:
     - out-degree ≤ 1 everywhere (a chain forest / "list" DAG, e.g. a
@@ -699,20 +637,25 @@ def longest_chain_depth(edges: DataFrame, max_iter: int = 64) -> DataFrame:
     # parquet (_checkpoint): the scan's honest file-size stats let AQE
     # broadcast the shrinking frontier into the edge join instead of
     # re-shuffling the (cached) edge table every round.
+    # The frontier size rides each Δ's spill write as an observe()
+    # metric, so the empty-frontier fixpoint test costs no job; a
+    # frontier still non-empty at the cap raises (a cycle, or a chain
+    # deeper than max_iter - 1).
     frontier = nodes.select(F.col("node").alias("dst"))
     deltas: list[DataFrame] = []
     # Loop exchanges sized by input volume, not core count (r17,
     # guide §2.2).
     with _loop_shuffle_scope(e.sparkSession, _source_file_bytes(e)):
-        for k in range(1, max_iter + 1):
-            frontier = _checkpoint(
-                e.join(frontier, "dst")
-                .select(F.col("src").alias("node"))
-                .distinct()
+        for k in _LoopState.rounds(max_iter, "longest_chain_depth"):
+            step, fetch = _probed(
+                e.join(frontier, "dst").select(F.col("src").alias("node")).distinct(),
+                (F.count(F.lit(1)),),
             )
-            if frontier.isEmpty():
+            frontier = _checkpoint(step)
+            (n_front,) = fetch()
+            if not n_front:
                 break
-            deltas.append(frontier.withColumn("chain_depth", F.lit(k)))
+            deltas.append(frontier.withColumn("chain_depth", F.lit(k + 1)))
             frontier = frontier.select(F.col("node").alias("dst"))
     all_depths = nodes.withColumn("chain_depth", F.lit(0))
     for d in deltas:
@@ -761,7 +704,7 @@ def _list_chain_rounds(t: DataFrame, state: _LoopState, max_iter: int) -> DataFr
     # cluster scale early rounds exceed the cap and stay shuffles.
     bcast_cap = _broadcast_edge_cap(t.sparkSession) // 2
     n_live: int | None = None
-    for _ in range(max_iter):
+    for _ in state.rounds(max_iter, "longest_chain_depth"):
         nxt = t.select(
             F.col("node").alias("p_node"),
             F.col("ptr").alias("p_ptr"),
@@ -785,10 +728,10 @@ def _list_chain_rounds(t: DataFrame, state: _LoopState, max_iter: int) -> DataFr
             if n_live is not None and n_live <= bcast_cap
             else live
         )
-        # One job per doubling round: the live-pointer COUNT probe
-        # rides the materializing aggregate (round_end_probe fusion);
-        # it is both the fixpoint test and next round's broadcast gate.
-        t, n_raw = state.round_end_probe(
+        # One job per doubling round: the live-pointer count rides the
+        # materialising job; it is both the fixpoint test and next
+        # round's broadcast gate.
+        t, n_raw = state.round_end(
             lhs.join(nxt, lhs.ptr == F.col("p_node")).select(
                 "node",
                 F.col("p_ptr").alias("ptr"),
@@ -796,8 +739,7 @@ def _list_chain_rounds(t: DataFrame, state: _LoopState, max_iter: int) -> DataFr
                     "chain_depth"
                 ),
             ).unionByName(done),
-            "ptr",
-            probe=F.sum(F.col("ptr").isNotNull().cast("long")),
+            probes=(F.sum(F.col("ptr").isNotNull().cast("long")),),
         )
         n_live = int(n_raw or 0)
         if not n_live:
@@ -856,9 +798,6 @@ def label_propagation(
     und.unpersist()
     state.finish(labels)
     return labels
-
-
-_LOUVAIN_VERBOSE = False
 
 
 def louvain(
@@ -1013,7 +952,8 @@ def louvain(
             # split, every node is eligible every round (measured on
             # the key-chain forest: hash parity left pair-swaps
             # oscillating and capped Q at 0.85).
-            (labels,) = state.round_end(
+            # The any-moved flag rides the round's materialising job.
+            labels, moved = state.round_end(
                 base.join(mv, "node", "left_outer")
                 .select(
                     "node",
@@ -1029,19 +969,9 @@ def louvain(
                     "node",
                     F.col("new_comm").alias("comm"),
                     (F.col("new_comm") != F.col("old_comm")).alias("changed"),
-                )
+                ),
+                probes=(F.max("changed"),),
             )
-            moved = not labels.filter("changed").isEmpty()
-            if _LOUVAIN_VERBOSE:
-                import sys as _sys
-                import time as _time
-
-                print(
-                    f"louvain level round {rnd}: moved="
-                    f"{labels.filter('changed').count()} t={_time.time():.1f}",
-                    file=_sys.stderr,
-                    flush=True,
-                )
             labels = labels.select("node", "comm")
             idle = 0 if moved else idle + 1
             if idle >= 2:  # full direction cycle with no move
@@ -1063,16 +993,6 @@ def louvain(
 
         n_nodes = k.count()
         n_comms = labels.select("comm").distinct().count()
-        if _LOUVAIN_VERBOSE:
-            import sys as _sys
-            import time as _time
-
-            print(
-                f"louvain level {_level}: {n_nodes} nodes -> {n_comms} comms "
-                f"t={_time.time():.1f}",
-                file=_sys.stderr,
-                flush=True,
-            )
         if n_comms == n_nodes:
             state.finish()
             break
@@ -1333,8 +1253,9 @@ def eigenvector_centrality(
     round, converged when Σ|x − x_last| < n·tol within max_iter —
     replicated as a DataFrame loop: the in-neighbor contribution is one
     join + groupBy per round (same key each round, so a cluster
-    pre-partitions the edge table once), the norm and the convergence
-    delta are 1-row aggregates folded back in via broadcast crossJoin.
+    pre-partitions the edge table once); the L2 norm rides the round's
+    materialising job and the convergence delta is one 1-row
+    aggregate over the materialized round.
     Fail-to-null: returns None when max_iter rounds pass without
     convergence, exactly like the reference's except-branch.
     """
@@ -1360,10 +1281,11 @@ def eigenvector_centrality(
     small_v = n <= _broadcast_edge_cap(edges.sparkSession) // 2
     for _ in range(max_iter):
         # One materialization per round: the un-normalized update with
-        # x_last carried along. Norm and convergence delta are then two
-        # O(V) single-row aggregates over the materialized frame, and
-        # the normalized x is a lazy projection of it (no plan growth —
-        # the frame is a checkpoint).
+        # x_last carried along. The L2 norm rides its materialising
+        # job; the convergence delta needs the norm, so it is one O(V)
+        # single-row aggregate over the materialized frame, and the
+        # normalized x is a lazy projection of it (no plan growth — the
+        # frame is a checkpoint).
         x_src = x.select(F.col("node").alias("src"), "x")
         contrib = (
             e.join(F.broadcast(x_src) if small_v else x_src, "src")
@@ -1377,11 +1299,10 @@ def eigenvector_centrality(
             F.col("x").alias("x_last"),
             (F.col("x") + F.coalesce(F.col("c"), F.lit(0.0))).alias("x_raw"),
         )
-        (raw,) = state.round_end(raw)
-        norm = (
-            raw.agg(F.sqrt(F.sum(F.col("x_raw") * F.col("x_raw"))).alias("n")).first()["n"]
-            or 1.0
+        raw, norm = state.round_end(
+            raw, probes=(F.sqrt(F.sum(F.col("x_raw") * F.col("x_raw"))),)
         )
+        norm = norm or 1.0
         delta = raw.agg(
             F.sum(F.abs(F.col("x_raw") / F.lit(norm) - F.col("x_last"))).alias("d")
         ).first()["d"]
@@ -1682,10 +1603,8 @@ def strongly_connected_components(
     )
     state = _LoopState()
     # Every node starts unsettled; an empty graph starts the loop with
-    # nothing to do. Updated each outer round by the round_end_probe,
-    # whose probe now carries the unsettled COUNT (not just any-left):
-    # the count doubles as the next round's n_act, folding the former
-    # act.count() job into the label materialization (r16 trim fusion).
+    # nothing to do. Updated each outer round by the round_end probe
+    # (the unsettled count, which doubles as the next round's n_act).
     n_unsettled = n_all
 
     for outer in range(max_outer):
@@ -1761,8 +1680,8 @@ def strongly_connected_components(
         #     eagerly — it is broadcast into the act/ae_cur rewrites,
         #     where a lazy plan would recompute the anti-join per use.
         #   - the act.count() at outer>0: the previous round's probe
-        #     carries the unsettled COUNT (see round_end_probe below),
-        #     so n_act arrives with the label checkpoint for free.
+        #     carries the unsettled COUNT (see round_end below), so
+        #     n_act arrives with the label checkpoint for free.
         act, ae_cur = active.select("node"), ae
         trimmed_parts: list[DataFrame] = []
         n_act = n_all if outer == 0 else n_unsettled
@@ -2085,15 +2004,12 @@ def strongly_connected_components(
                 F.coalesce("new_part", "part").alias("part"),
                 F.coalesce("scc", "new_scc").alias("scc"),
             )
-        # round_end_probe folds next round's "how many nodes are still
-        # unsettled?" probe into the SAME job that materializes the
-        # label table — the COUNT (not just any-left) doubles as the
-        # next round's trim n_act, so neither the former
-        # active.isEmpty() nor the former act.count() costs a job.
-        labels, _n_raw = state.round_end_probe(
+        # The unsettled COUNT rides the label table's materialising
+        # job and doubles as the next round's trim n_act, so neither
+        # an active.isEmpty() nor an act.count() costs a job.
+        labels, _n_raw = state.round_end(
             upd.withColumn("unsettled", F.col("scc").isNull()),
-            "unsettled",
-            probe=F.sum(F.col("unsettled").cast("long")),
+            probes=(F.sum(F.col("unsettled").cast("long")),),
         )
         n_unsettled = int(_n_raw or 0)
         for c in scratch:
@@ -2239,43 +2155,33 @@ def kcore(edges: DataFrame, k: int, max_iter: int = 128) -> DataFrame:
         .localCheckpoint(eager=True)
     )
     deg = e_static.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
+    # The count of nodes below k rides each degree table's
+    # materialising job, so the round that reaches the fixpoint also
+    # observes it. No node below k (vacuously true when deg is empty —
+    # the empty-core case): deg IS the core degree table. A cap reached
+    # first raises: a partial peel would violate degree >= k.
+    n_below = F.sum((F.col("deg") < k).cast("long"))
     state = _LoopState()
-    (deg,) = state.round_end(deg)
-    converged = False
-    for _ in range(max_iter):
-        dying = deg.filter(F.col("deg") < k).select("src")
-        if dying.count() == 0:
-            # No node below k (vacuously true when deg is empty — the
-            # empty-core case): deg IS the core degree table.
-            converged = True
-            break
-        lost = (
-            e_static.join(dying, "src", "semi")
-            .groupBy("dst")
-            .agg(F.count(F.lit(1)).alias("lost"))
-        )
-        deg_next = (
-            deg.join(dying, "src", "anti")
-            .join(lost.withColumnRenamed("dst", "src"), "src", "left_outer")
-            .select(
-                "src",
-                (F.col("deg") - F.coalesce("lost", F.lit(0))).alias("deg"),
+    deg, n_dying = state.round_end(deg, probes=(n_below,))
+    if n_dying:
+        for _ in state.rounds(max_iter, "kcore"):
+            dying = deg.filter(F.col("deg") < k).select("src")
+            lost = (
+                e_static.join(dying, "src", "semi")
+                .groupBy("dst")
+                .agg(F.count(F.lit(1)).alias("lost"))
             )
-        )
-        (deg,) = state.round_end(deg_next)
-    if not converged:
-        # The loop only OBSERVES convergence one round after the peel
-        # that achieved it, so a max_iter tuned to the exact peel
-        # depth would land here with a perfectly valid core in deg.
-        # One cheap dying-count certifies it before giving up; the
-        # raise remains for genuine non-fixpoints (the degree >= k
-        # invariant is never weakened).
-        converged = deg.filter(F.col("deg") < k).count() == 0
-    if not converged:
-        raise RuntimeError(
-            f"kcore: no fixpoint after {max_iter} rounds; raise max_iter "
-            "(a partial peel would violate the degree >= k invariant)"
-        )
+            deg_next = (
+                deg.join(dying, "src", "anti")
+                .join(lost.withColumnRenamed("dst", "src"), "src", "left_outer")
+                .select(
+                    "src",
+                    (F.col("deg") - F.coalesce("lost", F.lit(0))).alias("deg"),
+                )
+            )
+            deg, n_dying = state.round_end(deg_next, probes=(n_below,))
+            if not n_dying:
+                break
     out = _checkpoint(
         deg.select(F.col("src").alias("node"), F.col("deg").alias("degree"))
     )
@@ -2295,9 +2201,9 @@ def hits(
 
     Scale shape mirrors eigenvector_centrality: each half-round is one
     equi-join + groupBy on a fixed key (a cluster pre-partitions the
-    edge table once and reuses it all rounds), the L2 norm is a 1-row
-    aggregate broadcast back via crossJoin, and lineage/stats reset on
-    the shared parquet-spill cadence. Returns (node, hub, authority)
+    edge table once and reuses it all rounds), the L2 norm rides the
+    half-round's materialising job, and lineage/stats reset on the
+    shared parquet-spill cadence. Returns (node, hub, authority)
     over the full vertex set — sinks get authority, sources get hub,
     isolated-direction nodes get exact 0.0.
     """
@@ -2313,28 +2219,20 @@ def hits(
         .distinct()
         .cache()
     )
-    # Round-10 restructure (the 54.5s sf0.1 g16 profile): the loop
-    # now runs on SPARSE score vectors — the per-half-round zero-fill
-    # join against the node universe is mathematically inert inside
-    # the loop (absent rows contribute nothing to the e-join sums and
-    # zeros add nothing to the L2 norm), so it happens ONCE at the
-    # output. Each half-round is a single Spark job: the contribution
-    # frame is a LAZY localCheckpoint materialized by its own norm
-    # aggregate (the _LoopState.round_end_probe shape — the aggregate
-    # touches every partition, so the checkpoint is fully pinned), and
-    # the norm comes back as a driver scalar (a Python float IS a
-    # double; no crossJoin/broadcast machinery). Superseded vectors
-    # are released one generation behind; every 8th round spills to
-    # parquet to reset carried plan statistics (the _checkpoint
-    # docstring's BigInt-growth hazard).
-    scratch: list[DataFrame] = []
+    # The loop runs on SPARSE score vectors — the zero-fill join
+    # against the node universe is inert inside the loop (absent rows
+    # contribute nothing to the e-join sums and zeros add nothing to
+    # the L2 norm), so it happens ONCE at the output. Each half-round
+    # is one _LoopState round: the contribution frame materializes
+    # with its L2 norm riding the same job, and the norm comes back as
+    # a driver scalar (a Python float IS a double). Two rounds per
+    # iteration, so period=16 spills every 8th iteration.
+    state = _LoopState(period=16)
 
     def _half(contrib: DataFrame, out_col: str) -> DataFrame:
-        full = contrib.localCheckpoint(eager=False)
-        nrm = full.agg(
-            F.sqrt(F.sum(F.col("raw") * F.col("raw"))).alias("n")
-        ).first()[0]
-        scratch.append(full)
+        full, nrm = state.round_end(
+            contrib, probes=(F.sqrt(F.sum(F.col("raw") * F.col("raw"))),)
+        )
         score = (
             (F.col("raw") / F.lit(float(nrm))) if nrm and nrm > 0 else F.lit(0.0)
         )
@@ -2349,8 +2247,7 @@ def hits(
         )
 
     h = nodes.withColumn("hub", F.lit(1.0))
-    prev_scratch: list[DataFrame] = []
-    for i in range(iters):
+    for _ in range(iters):
         a = _authority_of(h)
         h = _half(
             e.join(a.withColumnRenamed("node", "dst"), "dst")
@@ -2358,13 +2255,6 @@ def hits(
             .agg(F.sum("authority").alias("raw")),
             "hub",
         )
-        if (i + 1) % 8 == 0:
-            spilled = _checkpoint(h)
-            scratch.append(spilled)
-            h = spilled
-        for c in prev_scratch:
-            _release(c)
-        prev_scratch, scratch = scratch, []
     a_fin = _authority_of(h)
     out = _checkpoint(
         nodes.join(h, "node", "left_outer")
@@ -2375,8 +2265,7 @@ def hits(
             F.coalesce("authority", F.lit(0.0)).alias("authority"),
         )
     )
-    for c in prev_scratch + scratch:
-        _release(c)
+    state.finish()
     e.unpersist()
     nodes.unpersist()
     return out
@@ -2518,15 +2407,13 @@ def _close_strategy(
       exactness through the usual semi join. Linear in |E|: this
       removes the O(|E|*B) bucket-ladder re-enumeration from the
       default plan space entirely.
-    - ``bucketed``: the pre-round-15 last resort, kept ONLY behind
-      ``PANDITYA_TRIANGLE_LADDER=1`` (for A/B provenance): hash-split
-      the closing set into cap-sized broadcast chunks, one wedge
-      re-enumeration per chunk — exact, but CPU grows O(|E|*B) with
-      the chunk count, the super-linear shape the sf10 probe measured
-      as a 17.8x decade ratio before the bloom close replaced it.
+    - ``bucketed`` (ONLY n > 16*cap with a MEASURED scratch shortfall
+      for the shuffle probe's wedge exchange): hash-split the closing
+      set into cap-sized broadcast chunks, one wedge re-enumeration per
+      chunk — exact, but CPU grows O(|E|*B) with the chunk count, the
+      super-linear shape the sf10 probe measured as a 17.8x decade
+      ratio before the bloom close replaced it.
     """
-    import os
-
     # The shuffle probe pays one wedge exchange the broadcast probe
     # never does; prefer it ONLY when that exchange measurably fits
     # local scratch (see _WEDGE_EXCHANGE_BYTES_PER_EDGE — the first
@@ -2542,8 +2429,6 @@ def _close_strategy(
         return ("broadcast", 1, 0)
     if n_edges <= 16 * cap:
         return ("bloom", 1, min(16, max(4, (64 * cap) // max(n_edges, 1))))
-    if os.environ.get("PANDITYA_TRIANGLE_LADDER") == "1":
-        return ("bucketed", -(-n_edges // cap), 0)
     if scratch_free_bytes is not None and not shuffle_fits:
         # Past 16x the cap the only exchange-free alternative is the
         # ladder: super-linear CPU, but it completes where the wedge
@@ -2726,11 +2611,10 @@ def triangle_list(
        removes false positives), with the wedge-side exchange cut
        ~10-20x versus the naive shuffle close.
 
-    ``close_buckets=B`` (B > 1) is the pre-round-15 last resort above
-    16*cap, now reachable ONLY via ``PANDITYA_TRIANGLE_LADDER=1``
-    (the shuffle-probed bloom replaced it as the default there — it
-    is linear in |E| where the ladder is O(|E|*B); kept for A/B
-    provenance and as an escape hatch on exchange-starved hosts):
+    ``close_buckets=B`` (B > 1) is the last resort above 16*cap, chosen
+    only when the shuffle-probed bloom's wedge exchange measurably
+    does not fit local scratch (the bloom is the default there — it
+    is linear in |E| where the ladder is O(|E|*B)):
     the closing-edge set is hash-split on (v, w) into B chunks that
     each fit the broadcast budget, and the wedge side is probed once
     per chunk — every triangle's closing edge lands in exactly one
@@ -3072,63 +2956,53 @@ def ktruss(edges: DataFrame, k: int, max_iter: int = 64) -> DataFrame:
     # Initial support from the already-materialized copy — the
     # survivor-subgraph enumeration must run exactly once.
     sup = te_by_edge.groupBy("ea", "eb").agg(F.count(F.lit(1)).alias("support"))
+    # The victim count rides each support table's materialising job,
+    # so the round that reaches the fixpoint also observes it.
+    n_below = F.sum((F.col("support") < k - 2).cast("long"))
     state = _LoopState()
-    (sup,) = state.round_end(sup)
-    converged = False
-    for _ in range(max_iter):
-        victims = sup.filter(F.col("support") < k - 2).select("ea", "eb")
-        if victims.count() == 0:
-            converged = True
-            break
-        # Triangles touched by this round's removals…
-        hit = (
-            te_by_edge.join(victims, ["ea", "eb"], "semi")
-            .select("tri")
-            .distinct()
-        )
-        hit_rows = te_by_tri.join(hit, ["tri"], "semi")
-        # …restricted to triangles still fully alive at round start
-        # (all 3 edge rows present in sup): a triangle destroyed in an
-        # earlier round always contains an already-removed edge, so
-        # this filter is the lazy equivalent of the old shrinking te.
-        alive_rows = hit_rows.join(sup.select("ea", "eb"), ["ea", "eb"], "semi")
-        destroyed = (
-            alive_rows.groupBy("tri")
-            .agg(F.count(F.lit(1)).alias("n_alive"))
-            .filter(F.col("n_alive") == 3)
-            .select("tri")
-        )
-        # …decrement only the SURVIVING edges of those triangles.
-        dec = (
-            alive_rows.join(destroyed, ["tri"], "semi")
-            .join(victims, ["ea", "eb"], "anti")
-            .groupBy("ea", "eb")
-            .agg(F.count(F.lit(1)).alias("dec"))
-        )
-        sup_next = (
-            sup.filter(F.col("support") >= k - 2)
-            .join(dec, ["ea", "eb"], "left_outer")
-            .select(
-                "ea",
-                "eb",
-                (
-                    F.col("support") - F.coalesce("dec", F.lit(0))
-                ).alias("support"),
+    sup, n_vic = state.round_end(sup, probes=(n_below,))
+    if n_vic:
+        for _ in state.rounds(max_iter, "ktruss"):
+            victims = sup.filter(F.col("support") < k - 2).select("ea", "eb")
+            # Triangles touched by this round's removals…
+            hit = (
+                te_by_edge.join(victims, ["ea", "eb"], "semi")
+                .select("tri")
+                .distinct()
             )
-        )
-        (sup,) = state.round_end(sup_next)
-    if not converged:
-        # Same one-round observation lag as kcore: a max_iter tuned
-        # to the exact peel depth leaves a valid truss in sup that
-        # the loop never got to certify. One victim-count check
-        # before raising; the invariant is never weakened.
-        converged = sup.filter(F.col("support") < k - 2).count() == 0
-    if not converged:
-        raise RuntimeError(
-            f"ktruss: no fixpoint after {max_iter} peel rounds; "
-            "raise max_iter (partial peel would violate the "
-            "support >= k-2 invariant)"
-        )
+            hit_rows = te_by_tri.join(hit, ["tri"], "semi")
+            # …restricted to triangles still fully alive at round start
+            # (all 3 edge rows present in sup): a triangle destroyed in an
+            # earlier round always contains an already-removed edge, so
+            # this filter is the lazy equivalent of the old shrinking te.
+            alive_rows = hit_rows.join(sup.select("ea", "eb"), ["ea", "eb"], "semi")
+            destroyed = (
+                alive_rows.groupBy("tri")
+                .agg(F.count(F.lit(1)).alias("n_alive"))
+                .filter(F.col("n_alive") == 3)
+                .select("tri")
+            )
+            # …decrement only the SURVIVING edges of those triangles.
+            dec = (
+                alive_rows.join(destroyed, ["tri"], "semi")
+                .join(victims, ["ea", "eb"], "anti")
+                .groupBy("ea", "eb")
+                .agg(F.count(F.lit(1)).alias("dec"))
+            )
+            sup_next = (
+                sup.filter(F.col("support") >= k - 2)
+                .join(dec, ["ea", "eb"], "left_outer")
+                .select(
+                    "ea",
+                    "eb",
+                    (
+                        F.col("support") - F.coalesce("dec", F.lit(0))
+                    ).alias("support"),
+                )
+            )
+            sup, n_vic = state.round_end(sup_next, probes=(n_below,))
+            if not n_vic:
+                break
     out = _checkpoint(
         sup.select(
             F.col("ea").alias("a"), F.col("eb").alias("b"), "support"
@@ -3340,28 +3214,23 @@ def truss_decomposition(
         .write.mode("append")
         .parquet(acc_dir)
     )
+    # Per-round support stats ride each support table's materialising
+    # job: min (the next level), count (the alive edges) and sum —
+    # every alive triangle contributes 3 to it, so the alive-triangle
+    # count the hybrid gate below needs is free too.
+    sup_stats = (F.min("support"), F.count(F.lit(1)), F.sum("support"))
     state = _LoopState()
-    (sup,) = state.round_end(sup)
+    sup, min_sup, n_alive, sum_sup = state.round_end(sup, probes=sup_stats)
     level = 0
-    converged = False
     rounds = 0
     local_n = 0
     local_rows: list[tuple[int, int, int]] = []
     rounds_dec = 0
-    for _ in range(max_rounds):
-        # sum(support) rides the same one-pass agg: every alive
-        # triangle contributes 3 to it, so the alive-triangle count
-        # the hybrid gate below needs is free — no extra job.
-        stats = sup.agg(
-            F.min("support").alias("m"),
-            F.count(F.lit(1)).alias("n"),
-            F.sum("support").alias("s"),
-        ).first()
-        if stats["n"] == 0:
-            converged = True
+    for _ in state.rounds(max_rounds, "truss_decomposition"):
+        if n_alive == 0:
             break
-        if stats["n"] <= local_tail_edges:
-            local_n = stats["n"]
+        if n_alive <= local_tail_edges:
+            local_n = n_alive
             t_loop = _time.time()
             local_rows = _local_truss_tail(
                 [(r["ea"], r["eb"], r["support"]) for r in sup.collect()],
@@ -3369,20 +3238,20 @@ def truss_decomposition(
             )
             if stats_out is not None:
                 stats_out["sec_local_tail"] = round(_time.time() - t_loop, 1)
-            converged = True
             break
         rounds += 1
-        level = max(level, stats["m"])
+        level = max(level, min_sup)
         victims = sup.filter(F.col("support") <= level).select("ea", "eb")
-        (
+        # The victim count rides the accumulator append.
+        victims_out, n_victims = _probed(
             victims.select(
                 F.col("ea").alias("a"),
                 F.col("eb").alias("b"),
                 F.lit(level + 2).cast("long").alias("trussness"),
-            )
-            .write.mode("append")
-            .parquet(acc_dir)
+            ),
+            (F.count(F.lit(1)),),
         )
+        victims_out.write.mode("append").parquet(acc_dir)
         # Support update over the SHRINKING triangle LIST — the
         # triangles are loop state, unlike the single-k peel's static
         # incidence. Survival invariant either branch: every row of
@@ -3400,7 +3269,7 @@ def truss_decomposition(
         # levels DECREMENT by exploding only the hit triangles.
         # Per-round volume tracks the CURRENT subgraph either way and
         # shrinks geometrically as levels rise.
-        n_vic = victims.count()  # cheap: filter on pinned sup
+        (n_vic,) = n_victims()
         bc_victims = n_vic <= cap
         # Round-15 hybrid gate (VERDICT r14 #5): on SPARSE-victim
         # rounds — this round's victims under decrement_frac of the
@@ -3416,7 +3285,7 @@ def truss_decomposition(
         # (decrement == recount, the equivalence the unrolled oracle
         # pins; also pinned directly by
         # test_truss_decomposition_decrement_matches_recount).
-        n_tri_alive = int(stats["s"] or 0) // 3
+        n_tri_alive = int(sum_sup or 0) // 3
         use_dec = bc_victims and n_vic < decrement_frac * n_tri_alive
         tri_next = tri
         for cols in (("ta", "tb"), ("tb", "tc"), ("ta", "tc")):
@@ -3495,7 +3364,9 @@ def truss_decomposition(
                 )
             )
         old_tri = tri
-        (tri, sup) = state.round_end(tri_next, sup_next)
+        sup, tri, min_sup, n_alive, sum_sup = state.round_end(
+            sup_next, tri_next, probes=sup_stats
+        )
         if old_tri is not tri:
             # Nothing lazy outlives the round (victims are already on
             # disk, tri/sup are materialized), so the superseded
@@ -3503,11 +3374,6 @@ def truss_decomposition(
             # waiting out _LoopState's two-generation window — it is
             # the one loop state here that is triangle-sized.
             _release(old_tri)
-    if not converged:
-        raise RuntimeError(
-            f"truss_decomposition: {max_rounds} rounds exhausted before "
-            "the peel emptied; raise max_rounds"
-        )
     if stats_out is not None:
         stats_out.update(
             distributed_rounds=rounds,
@@ -3567,8 +3433,7 @@ def weighted_sssp(
     state = _LoopState()
     (dist,) = state.round_end(dist)
     frontier = dist
-    converged = False
-    for _ in range(max_iter):
+    for _ in state.rounds(max_iter, "weighted_sssp"):
         cand = (
             frontier.join(e, frontier["node"] == e["src"])
             .groupBy(F.col("dst").alias("node"))
@@ -3589,20 +3454,15 @@ def weighted_sssp(
         )
         # ONE materialization per round AND one job: the (node, dist,
         # improved) frame is the only checkpointed state, and the
-        # max(improved) convergence probe IS the materializing action
-        # (round_end_probe) — the dist/frontier pair are lazy
-        # projections over the fresh checkpoint.
-        merged, any_improved = state.round_end_probe(merged, "improved")
+        # max(improved) fixpoint flag rides its materialising job — the
+        # dist/frontier pair are lazy projections over the checkpoint.
+        merged, any_improved = state.round_end(
+            merged, probes=(F.max("improved"),)
+        )
         dist = merged.select("node", "dist")
         frontier = merged.filter(F.col("improved")).select("node", "dist")
         if not any_improved:
-            converged = True
             break
-    if not converged:
-        raise RuntimeError(
-            f"weighted_sssp: no fixpoint after {max_iter} rounds "
-            "(negative cycle impossible; raise max_iter)"
-        )
     out = _checkpoint(dist)
     state.finish()
     return out

@@ -33,17 +33,16 @@ def seeds(spark, *ids):
     return spark.createDataFrame([(i,) for i in ids], ["node"])
 
 
-def test_loop_shuffle_scope_lowers_and_restores(spark, monkeypatch):
+def test_loop_shuffle_scope_lowers_and_restores(spark):
     """The volume-derived loop partitioning scope (r17): lowers
     spark.sql.shuffle.partitions inside the with-block according to the
     byte estimate, restores the session value on exit (also on raise),
     never RAISES above the session setting, and is a no-op when the
-    estimate is unavailable or the env knob disables it."""
+    estimate is unavailable."""
     from panditya_spark.operators.graph import _loop_shuffle_scope
 
     key = "spark.sql.shuffle.partitions"
     before = spark.conf.get(key)
-    monkeypatch.setenv("PANDITYA_LOOP_SHUFFLE_TARGET_MB", "8")
     # Small estimate -> lowered inside, restored after.
     with _loop_shuffle_scope(spark, 1 << 20):
         assert int(spark.conf.get(key)) == 1
@@ -51,19 +50,66 @@ def test_loop_shuffle_scope_lowers_and_restores(spark, monkeypatch):
     # Huge estimate -> clamped at the session value (never raised).
     with _loop_shuffle_scope(spark, 1 << 40):
         assert spark.conf.get(key) == before
-    # None estimate (non-file source) and env-disabled -> no-op.
+    # None estimate (non-file source) -> no-op.
     with _loop_shuffle_scope(spark, None):
         assert spark.conf.get(key) == before
-    monkeypatch.setenv("PANDITYA_LOOP_SHUFFLE_TARGET_MB", "0")
-    with _loop_shuffle_scope(spark, 1 << 20):
-        assert spark.conf.get(key) == before
-    monkeypatch.setenv("PANDITYA_LOOP_SHUFFLE_TARGET_MB", "8")
     # Restored even when the loop body raises.
     with pytest.raises(RuntimeError):
         with _loop_shuffle_scope(spark, 1 << 20):
             assert int(spark.conf.get(key)) == 1
             raise RuntimeError("loop body failure")
     assert spark.conf.get(key) == before
+
+
+def test_loop_state_probes_ride_both_round_kinds(spark):
+    """Several probes come back as raw values (not coerced) from the
+    round's own materialisation, on localCheckpoint rounds and on the
+    parquet-spill rounds of the cadence alike; further frames of the
+    round are materialised and returned in order."""
+    from panditya_spark.operators.graph import _LoopState
+
+    df = spark.range(10).withColumn("v", F.col("id") * 2)
+    other = spark.range(3)
+    state = _LoopState(period=2)
+    for rnd in range(1, 5):
+        out, extra, total, n, any_big, nothing = state.round_end(
+            df,
+            other,
+            probes=(
+                F.sum("v"),
+                F.count(F.lit(1)),
+                F.max(F.col("id") > 5),
+                F.max(F.when(F.col("id") < 0, F.col("v"))),
+            ),
+        )
+        spilled = getattr(out, "_panditya_ckpt_path", None) is not None
+        assert spilled == (rnd % 2 == 0)
+        assert (total, n, any_big, nothing) == (90, 10, True, None)
+        assert sorted(r.id for r in out.collect()) == list(range(10))
+        assert extra.count() == 3
+    state.finish()
+
+
+def test_loop_state_rounds_cap():
+    """rounds() raises with the operator name and "no fixpoint" when a
+    loop asks for a round past the cap; breaking on the last round, or
+    earlier, does not raise."""
+    from panditya_spark.operators.graph import _LoopState
+
+    with pytest.raises(RuntimeError, match="^my_op: no fixpoint after 3 rounds"):
+        for _ in _LoopState.rounds(3, "my_op"):
+            pass
+    seen = []
+    for i in _LoopState.rounds(3, "my_op"):
+        seen.append(i)
+        if i == 2:
+            break
+    assert seen == [0, 1, 2]
+    for i in _LoopState.rounds(3, "my_op"):
+        break
+    with pytest.raises(RuntimeError, match="no fixpoint after 0 rounds"):
+        for _ in _LoopState.rounds(0, "my_op"):
+            pass
 
 
 def test_bfs_hops_and_dist(spark, chain_graph):
@@ -105,6 +151,18 @@ def test_connected_components(spark, chain_graph):
         assert comp[r.src] == comp[r.dst]
 
 
+def test_connected_components_raises_at_round_cap(spark):
+    """A path needs several pointer-jumping rounds: max_iter=1 must
+    raise, not return the non-fixpoint round-1 labels."""
+    path = spark.createDataFrame(
+        [(f"n{i}", f"n{i+1}") for i in range(8)], ["src", "dst"]
+    )
+    with pytest.raises(RuntimeError, match="connected_components: no fixpoint"):
+        connected_components(path, max_iter=1)
+    got = dict(rows(connected_components(path), "node", "component"))
+    assert got == {f"n{i}": "n0" for i in range(9)}
+
+
 def test_degrees(spark, chain_graph):
     d = {r[0]: (r[1], r[2], r[3]) for r in rows(degrees(chain_graph))}
     assert d["b"] == (2, 1, 3)  # in: a,e; out: c
@@ -126,6 +184,25 @@ def test_longest_chain_depth_branchy(spark):
     )
     out = dict(rows(longest_chain_depth(df), "node", "chain_depth"))
     assert out == {"a": 2, "b": 0, "c": 1, "d": 0}
+
+
+def test_longest_chain_depth_raises_at_round_cap(spark):
+    """A branchy DAG (general path) of depth 5 with max_iter=3, and a
+    pointer cycle (out-degree <= 1, list path) that never settles,
+    must raise instead of returning truncated depths."""
+    dag = spark.createDataFrame(
+        [("a", "b"), ("a", "x"), ("b", "c"), ("c", "d"), ("d", "e"),
+         ("e", "f")],
+        ["src", "dst"],
+    )
+    with pytest.raises(RuntimeError, match="longest_chain_depth: no fixpoint"):
+        longest_chain_depth(dag, max_iter=3)
+    assert dict(rows(longest_chain_depth(dag), "node", "chain_depth"))["a"] == 5
+    cycle = spark.createDataFrame(
+        [("p", "q"), ("q", "r"), ("r", "p")], ["src", "dst"]
+    )
+    with pytest.raises(RuntimeError, match="longest_chain_depth: no fixpoint"):
+        longest_chain_depth(cycle, max_iter=4)
 
 
 def test_undirected_dedup(spark):
@@ -656,8 +733,8 @@ def test_kcore_raises_on_exhausted_nonfixpoint(spark):
     cannot converge and must raise instead of returning a non-core.
     But a max_iter tuned to the EXACT peel depth (7 rounds for this
     13-node path: 6 two-endpoint rounds + the final center node) is a
-    valid fixpoint the loop just never re-observed — the post-loop
-    certification must return it, not raise."""
+    valid fixpoint, observed by the round that reaches it — it must
+    return, not raise."""
     import pytest
 
     from panditya_spark.operators.graph import kcore
@@ -666,14 +743,37 @@ def test_kcore_raises_on_exhausted_nonfixpoint(spark):
     df = spark.createDataFrame(path, ["src", "dst"])
     with pytest.raises(RuntimeError, match="no fixpoint"):
         kcore(df, k=2, max_iter=2)
-    # Exact peel depth: every round peeled, convergence observable
-    # only one round later — certified post-loop instead of raising.
+    # Exact peel depth: the last round's probe already sees no node
+    # below k, so the loop breaks on its last round.
     assert kcore(df, k=2, max_iter=7).count() == 0
     # One short of the peel depth still leaves a sub-k node -> raise.
     with pytest.raises(RuntimeError, match="no fixpoint"):
         kcore(df, k=2, max_iter=6)
     # With enough rounds the same input converges (to the empty core).
     assert kcore(df, k=2, max_iter=16).count() == 0
+
+
+def test_kcore_jobs_per_run(spark):
+    """Regression guard on the round protocol: the below-k count rides
+    each round's materialisation, so a 7-round peel of a 13-node path
+    runs about 60 Spark jobs; a separate per-round count() adds at
+    least one more job per round."""
+    from panditya_spark.operators.graph import kcore
+
+    df = spark.createDataFrame(
+        [(f"n{i}", f"n{i+1}") for i in range(12)], ["src", "dst"]
+    )
+    sc = spark.sparkContext
+    kcore(df, k=2).count()  # warm
+    group = "test-kcore-jobs"
+    sc.setJobGroup(group, group)
+    try:
+        assert kcore(df, k=2).count() == 0
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= 64
 
 
 def test_ktruss_raises_on_exhausted_nonfixpoint(spark):
@@ -707,9 +807,9 @@ def test_ktruss_raises_on_exhausted_nonfixpoint(spark):
     df = spark.createDataFrame(edges, ["src", "dst"])
     with pytest.raises(RuntimeError, match="no fixpoint"):
         ktruss(df, k=4, max_iter=1)
-    # max_iter == exact peel depth (2 victim rounds): the loop never
-    # re-observes the fixpoint, but the post-loop certification does —
-    # return the valid (here: empty) truss instead of raising.
+    # max_iter == exact peel depth (2 victim rounds): the second
+    # round's probe observes the fixpoint — return the valid (here:
+    # empty) truss instead of raising.
     assert ktruss(df, k=4, max_iter=2).count() == 0
     got = ktruss(df, k=4, max_iter=32)
     assert got.count() == 0  # the reinforced cycle has no 4-truss
@@ -928,15 +1028,14 @@ def test_triangle_list_bloom_close_matches_broadcast(spark):
             assert got == want, (bits, probe)
 
 
-def test_close_strategy_tiers(monkeypatch):
+def test_close_strategy_tiers():
     """broadcast under the cap, broadcast-probed bloom to 16x the cap
     (bits clamped to [4, 16]), shuffle-probed bloom past that; the
-    bucket ladder only behind PANDITYA_TRIANGLE_LADDER=1; the
-    prefer_broadcast_in_cap flag keeps broadcast for the whole in-cap
-    range (truss_decomposition's loop-pressure knob)."""
+    bucket ladder only on a measured scratch shortfall past 16x the
+    cap; the prefer_broadcast_in_cap flag keeps broadcast for the whole
+    in-cap range (truss_decomposition's loop-pressure knob)."""
     from panditya_spark.operators.graph import _close_strategy
 
-    monkeypatch.delenv("PANDITYA_TRIANGLE_LADDER", raising=False)
     assert _close_strategy(10, 10) == ("broadcast", 1, 0)
     strat, buckets, bits = _close_strategy(11, 10)
     assert (strat, buckets) == ("bloom", 1) and bits == 16
@@ -971,15 +1070,12 @@ def test_close_strategy_tiers(monkeypatch):
     # Past 16x the cap: shuffle-probed bloom at the 4-bit floor is
     # the default (unknown scratch included — no broadcast-probe
     # alternative exists there); a MEASURED shortfall falls back to
-    # the ladder; the env flag forces the ladder outright.
+    # the ladder.
     assert _close_strategy(161, 10) == ("bloom_shuffle", 1, 4)
     assert _close_strategy(
         161, 10, scratch_free_bytes=1 << 40
     ) == ("bloom_shuffle", 1, 4)
     assert _close_strategy(161, 10, scratch_free_bytes=1)[0] == "bucketed"
-    monkeypatch.setenv("PANDITYA_TRIANGLE_LADDER", "1")
-    strat, buckets, _ = _close_strategy(161, 10)
-    assert strat == "bucketed" and buckets == 17
 
 
 def test_ktruss_bloom_close_matches_bruteforce(spark, monkeypatch):
@@ -1077,7 +1173,6 @@ def test_ktruss_bloom_shuffle_close_matches_bruteforce(spark, monkeypatch):
     shuffle probe."""
     from panditya_spark.operators import graph as G
 
-    monkeypatch.delenv("PANDITYA_TRIANGLE_LADDER", raising=False)
     monkeypatch.setattr(G, "_broadcast_edge_cap", lambda spark: 0)
     assert G._close_strategy(15, 0)[0] == "bloom_shuffle"
     edges = [
