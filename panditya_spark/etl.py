@@ -35,11 +35,17 @@ Quirks replicated on purpose (see SURVEY.md §4):
 
 from __future__ import annotations
 
+from collections import defaultdict
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from panditya_spark.operators.relational import split_to_array, year_pair_with_guard
+from panditya_spark.operators.relational import (
+    formatted_freq_agg,
+    split_to_array,
+    year_pair_with_guard,
+)
 from panditya_spark.sources.loaders import read_csv_all_string
 
 # transform.py:186-190
@@ -290,29 +296,14 @@ def entities_from_csv(spark: SparkSession, path: str) -> DataFrame:
     work_disc = entities.filter(F.col("type") == "work").select(
         F.col("id").alias("wid"), F.col("discipline").alias("wdisc")
     )
-    author_disc = (
+    author_disc = formatted_freq_agg(
         entities.filter(F.col("type") == "author")
         .select(F.col("id").alias("aid"), F.explode("work_ids").alias("wid"))
         .join(work_disc, "wid")
-        .filter(F.col("wdisc").isNotNull() & (F.col("wdisc") != ""))
-        .groupBy("aid", "wdisc")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .groupBy("aid")
-        .agg(
-            F.concat_ws(
-                ", ",
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(
-                            F.struct((-F.col("cnt")).alias("neg"), F.col("wdisc").alias("d"))
-                        )
-                    ),
-                    lambda s: F.concat(
-                        s["d"], F.lit(" ("), (-s["neg"]).cast("string"), F.lit(")")
-                    ),
-                ),
-            ).alias("disciplines")
-        )
+        .filter(F.col("wdisc").isNotNull() & (F.col("wdisc") != "")),
+        "aid",
+        "wdisc",
+        "disciplines",
     )
 
     # --- year backfill: first author in author_ids ORDER with a year
@@ -436,17 +427,10 @@ def etext_links_from_csv(
 
 
 def etext_nested_mapping(links: DataFrame, counts: DataFrame) -> dict:
-    """Re-build the exact nested JSON shape of transform.py:246-270:
-    work_id → collection → (sorted url list | subtype → sorted url
-    list), collections with a single subtype flattened to the bare
-    list; plus the two count dicts (zero-filled for all known
-    collections). Driver-side dict shaping happens at the serving
-    boundary, after the heavy lifting aggregated in Spark."""
-    mapping = fold_nested_links(
-        links.groupBy("work_id", "collection", "subtype")
-        .agg(F.array_sort(F.collect_set("url")).alias("urls"))
-        .collect()
-    )
+    """Re-build the exact nested JSON shape of transform.py:246-270
+    (nest_links over the link table) plus the two count dicts
+    (zero-filled for all known collections)."""
+    mapping = nest_links(links.select("work_id", "collection", "subtype", "url").collect())
     totals = dict.fromkeys(COLLECTION_SUBTYPE_LABELS, 0)
     missing = dict.fromkeys(COLLECTION_SUBTYPE_LABELS, 0)
     for r in counts.collect():
@@ -459,13 +443,18 @@ def etext_nested_mapping(links: DataFrame, counts: DataFrame) -> dict:
     }
 
 
-def fold_nested_links(grouped) -> dict:
-    """(work_id, collection, subtype, urls) rows → work_id → collection
-    → (url list | subtype → url list), single-subtype collections
-    flattened to the bare list (transform.py:242-244)."""
+def nest_links(rows) -> dict:
+    """(work_id, collection, subtype, url) rows → work_id → collection →
+    (sorted url list | subtype → sorted url list), single-subtype
+    collections flattened to the bare list (transform.py:242-270). Urls
+    are de-duplicated and sorted by code point, which is UTF-8 byte
+    order, as Spark's array_sort(collect_set(url)) would sort them."""
+    urls: dict = defaultdict(set)
+    for work_id, collection, subtype, url in rows:
+        urls[work_id, collection, subtype].add(url)
     mapping: dict = {}
-    for r in grouped:
-        mapping.setdefault(r.work_id, {}).setdefault(r.collection, {})[r.subtype] = list(r.urls)
+    for (work_id, collection, subtype), u in urls.items():
+        mapping.setdefault(work_id, {}).setdefault(collection, {})[subtype] = sorted(u)
     for colls in mapping.values():
         for cname, subtypes in list(colls.items()):
             if len(subtypes) == 1:

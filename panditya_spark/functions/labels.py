@@ -52,21 +52,21 @@ def dropdown_label(
 
 
 # ---------------------------------------------------------------- J6
+# flask_app.py:173-180 — phrase per (source type, target type); any
+# other pair has none (the reference logs an error and returns None).
+# The serving layer looks phrases up here on the driver.
+EDGE_PHRASES = {
+    ("author", "work"): "source author wrote target work",
+    ("work", "work"): "source base text inspired target commentary",
+}
+
+
 def edge_relationship(src_type: Column, dst_type: Column) -> Column:
-    """flask_app.py:173-180 — phrase per (source type, target type);
-    null for invalid pairs (the reference logs an error and returns
-    None)."""
-    return (
-        F.when(
-            (src_type == "author") & (dst_type == "work"),
-            F.lit("source author wrote target work"),
-        )
-        .when(
-            (src_type == "work") & (dst_type == "work"),
-            F.lit("source base text inspired target commentary"),
-        )
-        .otherwise(F.lit(None).cast("string"))
-    )
+    """EDGE_PHRASES as a column; null for invalid pairs."""
+    phrase = F.lit(None).cast("string")
+    for (s, d), text in EDGE_PHRASES.items():
+        phrase = F.when((src_type == s) & (dst_type == d), F.lit(text)).otherwise(phrase)
+    return phrase
 
 
 # ---------------------------------------------------------------- G4

@@ -11,24 +11,29 @@ projection + edge relationship phrases → response dict.
 A served subgraph is at most SERVING_MAX_ROWS nodes, so its BFS state
 is small by construction and lives on the driver (the Pregelix rule:
 pick the physical plan by the active-vertex count). The visited map
-and the frontier are Python values; each hop is one bounded collect of
-the edges touching the frontier, and three more bounded collects fetch
-the node projection, the e-text rows and the induced edges, so a
-1-hop request is a handful of Spark jobs (7 on the perfbench serve
-catalog) with no per-request adjacency build or checkpoint. Id sets
-reach the JVM as one JSON literal (_in_ids), never spliced into SQL
-text.
+and the frontier are Python values. The catalog is projected once per
+frame triple into one tagged union of node, e-text and edge rows
+(_subgraph_rows), so a request only builds id-set literals: each hop is
+one bounded collect of the union, bringing the frontier's node and
+e-text rows and the edges it expands, and one closing collect brings
+the rest. A k-hop request is k+1 Spark jobs (2 at 1 hop) with no
+per-request projection build, adjacency build or checkpoint; the e-text
+nesting and the relationship phrase are folded on the driver. Id sets
+reach the JVM as one JSON literal per collect (_json_lit), never
+spliced into SQL text.
 """
 
 from __future__ import annotations
 
+import functools
 import json
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
-from panditya_spark.etl import fold_nested_links
-from panditya_spark.functions.labels import date_info, edge_relationship
+from panditya_spark.etl import nest_links
+from panditya_spark.functions.labels import EDGE_PHRASES, date_info
 
 # Serving-boundary row cap (VERDICT r8 #4): every response path here
 # collects into the driver — correct reference parity (the jsonify
@@ -68,6 +73,26 @@ def _bounded_collect(df: DataFrame, what: str, cap: int | None = None) -> list:
     return rows
 
 
+def _tagged_collect(
+    df: DataFrame, parts: dict[str, str], got: dict[str, list] | None = None
+) -> dict[str, list]:
+    """One bounded collect of a tagged union, rows appended per tag to
+    got: df's first column is the tag of the part each row belongs to,
+    and parts maps each tag to the serving surface it feeds. Each part is
+    capped as if it were collected alone, rows already in got included:
+    the probe fetches len(parts) * (cap+1) rows, so a result whose parts
+    are each within the cap arrives whole, and a truncated one has a
+    part over it."""
+    cap = SERVING_MAX_ROWS
+    got = {t: [] for t in parts} if got is None else got
+    for row in df.limit(len(parts) * (cap + 1)).collect():
+        got[row[0]].append(row)
+    for tag, what in parts.items():
+        if len(got[tag]) > cap:
+            raise _cap_exceeded(what, cap)
+    return got
+
+
 def _json_lit(value, ddl: str) -> Column:
     """A Python list/dict as one typed literal column: a single JSON
     string parsed by from_json (constant-folded by the optimizer). Any
@@ -93,35 +118,77 @@ def validate_subgraph_inputs(authors, works, hops, exclude_list):
     return None
 
 
-def _frontier_bfs(
-    edges: DataFrame, center: list[str], hops: int, exclude: set[str]
-) -> dict[str, int]:
-    """node → dist for the undirected k-hop ball around center, in BFS
-    order. Excluded nodes are visited but never expanded
-    (grapher.py:48-50). Each hop is one bounded collect of the edges
-    touching the expandable frontier; every such edge ends inside the
-    final node set, so its cap is never tighter than the induced-edge
-    collect's."""
-    dist = dict.fromkeys(center, 0)
-    frontier = center
-    for depth in range(1, hops + 1):
-        expand = {n for n in frontier if n not in exclude}
-        if not expand:
-            break
-        touching = _bounded_collect(
-            edges.filter(_in_ids(F.col("src"), expand) | _in_ids(F.col("dst"), expand))
-            .select("src", "dst"),
-            "subgraph edge set",
+# The subgraph union's tags and the serving surface each one's cap names.
+_SUBGRAPH_PARTS = {
+    "n": "subgraph node set",
+    "l": "subgraph e-text annotation",
+    "e": "subgraph edge set",
+}
+
+
+@functools.lru_cache(maxsize=1)
+def _entity_dates(sc) -> Column:
+    """date_info over the entity columns, built once per SparkContext:
+    it takes about 20 Column calls, each a few py4j round trips, and the
+    dropdown set-up and every subgraph catalog share it."""
+    return date_info(
+        F.col("type"),
+        F.col("lowest_year"),
+        F.col("highest_year"),
+        F.col("author_lowest_year"),
+        F.col("author_highest_year"),
+    )
+
+
+@functools.lru_cache(maxsize=4)
+def _subgraph_rows(
+    entities: DataFrame, edges: DataFrame, etext_links: DataFrame | None
+) -> DataFrame:
+    """The catalog as one single-partition tagged union of string rows,
+    built once per frame triple (memoised by frame identity, so a
+    request only builds its id-set literals):
+
+        ('n', id, label, type, aka, social_ids, dates, discipline, disciplines)
+        ('l', work_id, collection, subtype, url, null x4)
+        ('e', src, dst, null x6)
+
+    One partition makes each bounded collect of it one Spark job."""
+    null = F.lit(None).cast("string")
+    author, work = F.col("type") == "author", F.col("type") == "work"
+    parts = [
+        entities.select(
+            F.lit("n"),
+            "id",
+            "name",
+            "type",
+            "aka",
+            F.when(author, F.col("social_identifiers")),
+            _entity_dates(entities.sparkSession.sparkContext),
+            F.when(work, F.col("discipline")),
+            F.when(author, F.col("disciplines")),
+        ),
+        edges.select(F.lit("e"), "src", "dst", *[null] * 6),
+    ]
+    if etext_links is not None:
+        parts.append(
+            etext_links.select(F.lit("l"), "work_id", "collection", "subtype", "url", *[null] * 4)
         )
-        frontier = []
-        for src, dst in touching:
-            for a, b in ((src, dst), (dst, src)):
-                if a in expand and b not in dist:
-                    dist[b] = depth
-                    frontier.append(b)
-        if len(dist) > SERVING_MAX_ROWS:
-            raise _cap_exceeded("subgraph node set", SERVING_MAX_ROWS)
-    return dist
+    union = functools.reduce(DataFrame.union, parts)
+    return union.toDF("t", "k", "a", "b", "c", "d", "e", "f", "g").coalesce(1)
+
+
+def _collect_codes(rows: DataFrame, codes: dict[str, int], got: dict[str, list]) -> None:
+    """One bounded collect of the subgraph union, its rows picked by one
+    id → code map literal. A negative code fetches the node's 'n' and
+    'l' rows. The magnitude (1 for an id not in the map) picks the edge
+    rows whose two ends' product is at least 4: 4 marks a node expanded
+    in this collect, which takes its edges to every node not marked 0 (a
+    node expanded earlier, whose edges are already in hand); 2 marks a
+    node of the closing collect, which takes the edges marked 2 at both
+    ends."""
+    pick = F.expr("IF(t = 'e', abs(coalesce(m[k], 1) * coalesce(m[a], 1)) >= 4, m[k] < 0)")
+    df = rows.withColumn("m", _json_lit(codes, "map<string,int>")).filter(pick).drop("m")
+    _tagged_collect(df, _SUBGRAPH_PARTS, got)
 
 
 def subgraph_response(
@@ -136,7 +203,14 @@ def subgraph_response(
     """Full §3.1 lifecycle. entities/edges come from etl.py;
     etext_links is the (work_id, collection, subtype, url) long table
     or None. Returns the flask_app.py:233-245 response dict, nodes in
-    BFS order."""
+    BFS order.
+
+    The BFS is the undirected k-hop ball around the centre; excluded
+    nodes are visited but never expanded (grapher.py:48-50). Each hop is
+    one collect of the frontier's node and e-text rows and of the edges
+    that touch its expandable nodes but no node expanded earlier; the
+    closing collect brings the last frontier's rows and the edges between
+    nodes never expanded. Every induced edge row arrives exactly once."""
     exclude_list = [] if exclude_list is None else exclude_list
     err = validate_subgraph_inputs(authors, works, hops, exclude_list)
     if err is not None:
@@ -146,31 +220,37 @@ def subgraph_response(
     exclude_list = list(set(exclude_list))
     excluded = set(exclude_list)
     center = list(dict.fromkeys(authors + works))
-    dist = _frontier_bfs(edges, center, hops, excluded)
 
-    dates = date_info(
-        F.col("type"),
-        F.col("lowest_year"),
-        F.col("highest_year"),
-        F.col("author_lowest_year"),
-        F.col("author_highest_year"),
-    )
-    by_id = {
-        r.id: r
-        for r in _bounded_collect(
-            entities.filter(_in_ids(F.col("id"), dist)).select(
-                "id",
-                F.col("name").alias("label"),
-                "type",
-                "aka",
-                F.when(F.col("type") == "author", F.col("social_identifiers")).alias("social_ids"),
-                dates.alias("dates"),
-                F.when(F.col("type") == "work", F.col("discipline")).alias("discipline"),
-                F.when(F.col("type") == "author", F.col("disciplines")).alias("disciplines"),
-            ),
-            "subgraph node set",
+    rows = _subgraph_rows(entities, edges, etext_links)
+    got: dict[str, list] = {t: [] for t in _SUBGRAPH_PARTS}
+    dist = dict.fromkeys(center, 0)
+    frontier, done = center, set()
+    for depth in range(1, hops + 1):
+        expand = {n for n in frontier if n not in excluded}
+        if not expand:
+            break
+        seen = len(got["e"])
+        _collect_codes(
+            rows,
+            dict.fromkeys(done, 0) | dict.fromkeys(frontier, -1) | dict.fromkeys(expand, -4),
+            got,
         )
-    }
+        done |= expand
+        frontier = []
+        for _, src, dst, *_ in got["e"][seen:]:
+            for a, b in ((src, dst), (dst, src)):
+                if a in expand and b not in dist:
+                    dist[b] = depth
+                    frontier.append(b)
+        if len(dist) > SERVING_MAX_ROWS:
+            raise _cap_exceeded("subgraph node set", SERVING_MAX_ROWS)
+    _collect_codes(
+        rows,
+        {n: 2 for n in dist if n not in done} | dict.fromkeys(frontier, -2),
+        got,
+    )
+
+    by_id = {r[1]: r for r in got["n"]}
     # Unknown ids (a bad seed, or a dangling id the BFS reached) → the
     # reference raises KeyError → 400, naming the first one.
     unknown = next((n for n in dist if n not in by_id), None)
@@ -178,48 +258,34 @@ def subgraph_response(
         return {"error": f"Invalid ID: '{unknown}'"}
 
     # e-text annotation (J7): nested per-work shape from the long table.
-    links_by_work = (
-        _nested_links(
-            etext_links.filter(_in_ids(F.col("work_id"), dist)),
-            "subgraph e-text annotation",
-        )
-        if etext_links is not None
-        else {}
-    )
+    links_by_work = nest_links(r[1:5] for r in got["l"])
     center_set = set(center)
     filtered_nodes = []
     for n in dist:
-        r = by_id[n]
+        _, _, label, etype, aka, social_ids, dates, discipline, disciplines = by_id[n]
         filtered_nodes.append(
             {
                 "id": n,
-                "label": r.label,
-                "type": r.type,
-                "aka": r.aka,
-                "social_ids": r.social_ids,
-                "dates": r.dates,
-                "discipline": r.discipline,
-                "disciplines": r.disciplines,
+                "label": label,
+                "type": etype,
+                "aka": aka,
+                "social_ids": social_ids,
+                "dates": dates,
+                "discipline": discipline,
+                "disciplines": disciplines,
                 "is_central": n in center_set,
                 "is_excluded": n in excluded,
                 # reference uses False (not None) for works without links
                 "etext_links": links_by_work.get(n, False),
             }
         )
-
-    # Induced edges, typed from the node projection: one id → type map
-    # literal both restricts the edges to the node set and feeds the
-    # relationship phrase.
-    types = _json_lit({n: by_id[n].type for n in dist}, "map<string,string>")
-    src_t, dst_t = types[F.col("src")], types[F.col("dst")]
-    typed_edges = _bounded_collect(
-        edges.filter(src_t.isNotNull() & dst_t.isNotNull()).select(
-            "src", "dst", edge_relationship(src_t, dst_t).alias("rel")
-        ),
-        "subgraph edge set",
-    )
     filtered_edges = [
-        {"source": e.src, "target": e.dst, "relationship": e.rel} for e in typed_edges
+        {
+            "source": src,
+            "target": dst,
+            "relationship": EDGE_PHRASES.get((by_id[src][3], by_id[dst][3])),
+        }
+        for _, src, dst, *_ in got["e"]
     ]
 
     return {
@@ -234,17 +300,10 @@ def subgraph_response(
 
 
 def _nested_links(links: DataFrame, what: str = "e-text link mapping") -> dict:
-    """work_id → collection → (sorted url list | subtype → sorted url
-    list), single-subtype collections flattened to the bare list — the
-    ETEXT_LINKS value shape (transform.py:246-270). Aggregation in
-    Spark, dict fold at the collect boundary."""
-    return fold_nested_links(
-        _bounded_collect(
-            links.groupBy("work_id", "collection", "subtype").agg(
-                F.array_sort(F.collect_set("url")).alias("urls")
-            ),
-            what,
-        )
+    """nest_links over a (work_id, collection, subtype, url) table, in
+    one bounded collect."""
+    return nest_links(
+        _bounded_collect(links.select("work_id", "collection", "subtype", "url"), what)
     )
 
 
@@ -309,26 +368,20 @@ def overlap_response(
             "error": f"Invalid collection(s): {collection1}, {collection2}. "
             f"Valid options: {sorted(valid)}"
         }
-    member = links.groupBy("work_id").agg(F.collect_set("collection").alias("colls"))
-    in1 = F.array_contains("colls", collection1)
-    in2 = F.array_contains("colls", collection2)
-    both = member.filter(in1 & in2).select("work_id")
-    only1 = member.filter(in1 & ~in2).select("work_id")
-    only2 = member.filter(in2 & ~in1).select("work_id")
-    pair = links.filter(F.col("collection").isin([collection1, collection2]))
-    return {
-        "overlap": _nested_links(pair.join(both, "work_id", "left_semi")),
-        f"only_in_{collection1}": _nested_links(
-            pair.filter(F.col("collection") == collection1).join(
-                only1, "work_id", "left_semi"
-            )
-        ),
-        f"only_in_{collection2}": _nested_links(
-            pair.filter(F.col("collection") == collection2).join(
-                only2, "work_id", "left_semi"
-            )
-        ),
-    }
+    # One collect: each link row of the two collections, tagged by its
+    # work's side of the partition.
+    w = Window.partitionBy("work_id")
+    in1 = F.max(F.col("collection") == collection1).over(w)
+    in2 = F.max(F.col("collection") == collection2).over(w)
+    names = {"o": "overlap", "1": f"only_in_{collection1}", "2": f"only_in_{collection2}"}
+    tag = F.when(in1 & in2, "o").when(in1, "1").otherwise("2")
+    got = _tagged_collect(
+        links.filter(F.col("collection").isin(collection1, collection2))
+        .select(tag, "work_id", "collection", "subtype", "url")
+        .coalesce(1),
+        dict.fromkeys(names, "e-text link mapping"),
+    )
+    return {name: nest_links(r[1:] for r in got[t]) for t, name in names.items()}
 
 
 def by_work_response(links: DataFrame, entities: DataFrame, ids_param: str | None) -> dict:
@@ -349,9 +402,10 @@ def by_work_response(links: DataFrame, entities: DataFrame, ids_param: str | Non
         return {"error": "No IDs provided"}
     valid_ids = {
         r.id
-        for r in entities.filter(
-            (F.col("type") == "work") & _in_ids(F.col("id"), ids)
-        ).select("id").collect()
+        for r in _bounded_collect(
+            entities.filter((F.col("type") == "work") & _in_ids(F.col("id"), ids)).select("id"),
+            "work id set",
+        )
     }
     if not valid_ids:
         return {"error": "No valid work IDs provided"}
@@ -407,15 +461,9 @@ def dropdown_options(entities: DataFrame) -> dict:
     Built once per session in the reference; same here (cache the
     result)."""
     from panditya_spark.functions.collation import collate
-    from panditya_spark.functions.labels import date_info, dropdown_label
+    from panditya_spark.functions.labels import dropdown_label
 
-    dates = date_info(
-        F.col("type"),
-        F.col("lowest_year"),
-        F.col("highest_year"),
-        F.col("author_lowest_year"),
-        F.col("author_highest_year"),
-    )
+    dates = _entity_dates(entities.sparkSession.sparkContext)
     labeled = entities.select(
         "id",
         "type",

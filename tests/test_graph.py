@@ -17,7 +17,7 @@ from panditya_spark.operators.graph import (
     pagerank,
     undirected,
 )
-from tests.conftest import rows
+from tests.conftest import count_jobs, rows
 
 
 @pytest.fixture()
@@ -763,17 +763,10 @@ def test_kcore_jobs_per_run(spark):
     df = spark.createDataFrame(
         [(f"n{i}", f"n{i+1}") for i in range(12)], ["src", "dst"]
     )
-    sc = spark.sparkContext
     kcore(df, k=2).count()  # warm
-    group = "test-kcore-jobs"
-    sc.setJobGroup(group, group)
-    try:
-        assert kcore(df, k=2).count() == 0
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    jobs = sc.statusTracker().getJobIdsForGroup(group)
-    assert 0 < len(jobs) <= 64
+    n, jobs = count_jobs(spark, lambda: kcore(df, k=2).count())
+    assert n == 0
+    assert 0 < jobs <= 64
 
 
 def test_ktruss_raises_on_exhausted_nonfixpoint(spark):

@@ -14,6 +14,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from panditya_spark import serving
+from tests.conftest import count_jobs, count_py4j
 
 ENTITY_HEADER = [
     "Content type", "ID", "Name", "Aka", "Social identifiers",
@@ -354,18 +355,128 @@ def test_subgraph_serving_cap(catalog, monkeypatch):
         subgraph(catalog, ["100"], [], 3)
 
 
+def _warm_request_jobs(spark, catalog, hops):
+    subgraph(catalog, ["100"], [], hops)  # warm
+    resp, jobs = count_jobs(spark, lambda: subgraph(catalog, ["100"], [], hops))
+    assert "graph" in resp
+    return jobs
+
+
 def test_subgraph_one_hop_job_count(spark, catalog):
-    """Regression guard on the driver-held BFS: a 1-hop request is one
-    frontier collect plus three response collects, a handful of Spark
-    jobs, where the distributed k-hop loop ran more than 20."""
-    sc = spark.sparkContext
-    subgraph(catalog, ["100"], [], 1)  # warm
-    group = "test-serving-one-hop"
-    sc.setJobGroup(group, group)
-    try:
-        subgraph(catalog, ["100"], [], 1)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    jobs = sc.statusTracker().getJobIdsForGroup(group)
-    assert 0 < len(jobs) <= 8
+    """Regression guard on the per-hop collect: a 1-hop request is one
+    hop collect and one closing collect, 2 Spark jobs (the four-collect
+    path ran 7, the distributed k-hop loop more than 20)."""
+    assert 0 < _warm_request_jobs(spark, catalog, 1) <= 2
+
+
+@pytest.mark.parametrize("hops,most", [(0, 1), (4, 5)])
+def test_subgraph_jobs_per_hop(spark, catalog, hops, most):
+    """A k-hop request is at most one Spark job per hop plus one."""
+    assert 0 < _warm_request_jobs(spark, catalog, hops) <= most
+
+
+def test_subgraph_py4j_round_trips(catalog):
+    """A warm 1-hop request builds only its id-set literals and two
+    collects: 52 py4j commands here, where rebuilding the projection
+    columns per request sent over 1,000."""
+    subgraph(catalog, ["100"], [], 1)  # warm: builds the catalog's projections
+    resp, sent = count_py4j(lambda: subgraph(catalog, ["100"], [], 1))
+    assert "graph" in resp
+    assert sent <= 100
+
+
+def test_subgraph_serves_duplicate_edge_rows(catalog):
+    """Every edge row arrives exactly once, so a duplicated row of the
+    edges frame is served twice, whether a hop or the closing collect
+    brings it."""
+    edges = catalog["edges"]
+    dup_cat = {
+        **catalog,
+        "edges": edges.union(edges.filter(F.col("dst") == "200")),
+        "edge_list": catalog["edge_list"] + [e for e in catalog["edge_list"] if e[1] == "200"],
+    }
+    for req in (
+        (["100"], [], 1, []),
+        (["100", "101"], ["200"], 0, []),
+        (["100"], [], 2, ["200"]),
+    ):
+        resp = assert_matches(dup_cat, *req)
+        pairs = [(e["source"], e["target"]) for e in resp["graph"]["edges"]]
+        assert pairs.count(("100", "200")) == 2
+
+
+# A request whose node set (6), e-text rows (6) and induced edges (7) are
+# each at most 7 rows, together 19.
+FULL = (["100", "101"], ["200", "201", "202", "207"], 0)
+
+
+def test_subgraph_union_parts_capped_alone(catalog, monkeypatch):
+    """The one collect of a union serves when each part is within the
+    cap, as the separate collects did, though the parts sum past it."""
+    want = brute_force(catalog, *FULL, [])
+    assert (len(want["nodes"]), len(want["edges"])) == (6, 7)
+    monkeypatch.setattr(serving, "SERVING_MAX_ROWS", 7)
+    assert_matches(catalog, *FULL, [])
+
+
+def test_every_serving_surface_raises_over_cap(catalog, monkeypatch):
+    """Each collect surface raises ServingCapExceeded naming itself."""
+    ent, links = catalog["entities"], catalog["links"]
+    cases = [
+        (2, lambda: subgraph(catalog, ["o'q"], [], 1), "subgraph node set"),
+        (6, lambda: subgraph(catalog, *FULL), "subgraph edge set"),
+        (3, lambda: subgraph(catalog, [], ["200"], 0), "subgraph e-text annotation"),
+        (2, lambda: serving.by_collection_response(links, "GRETIL"), "e-text link mapping"),
+        (1, lambda: serving.unique_to_collection_response(links, "GRETIL"),
+         "e-text link mapping"),
+        (1, lambda: serving.overlap_response(links, "GRETIL", "SARIT"), "e-text link mapping"),
+        (1, lambda: serving.by_work_response(links, ent, "200,201"), "work id set"),
+        (1, lambda: serving.entity_labels_response(ent, ["100", "200"]), "entity label set"),
+        (2, lambda: serving.dropdown_options(ent), "dropdown option set"),
+        (1, lambda: serving.visualize_collection_params(links, ent, "DCS"),
+         "visualize author set"),
+    ]
+    for cap, call, what in cases:
+        monkeypatch.setattr(serving, "SERVING_MAX_ROWS", 10**5)
+        call()  # serves under the default cap
+        monkeypatch.setattr(serving, "SERVING_MAX_ROWS", cap)
+        with pytest.raises(serving.ServingCapExceeded, match=what):
+            call()
+
+
+def test_by_work_id_probe_is_capped(catalog, monkeypatch):
+    """The valid-work-id probe collects under the serving cap: at the cap
+    it serves, one past it raises before any link is fetched."""
+    ent, links = catalog["entities"], catalog["links"]
+    want = _nested(catalog["link_rows"], {"201", "202"})
+    monkeypatch.setattr(serving, "SERVING_MAX_ROWS", 10)
+    assert serving.by_work_response(links, ent, "201,202,100,999") == want
+    monkeypatch.setattr(serving, "SERVING_MAX_ROWS", 2)
+    assert serving.by_work_response(links, ent, "201,202") == want
+    monkeypatch.setattr(serving, "SERVING_MAX_ROWS", 1)
+    with pytest.raises(serving.ServingCapExceeded, match="work id set"):
+        serving.by_work_response(links, ent, "201,202")
+
+
+@pytest.mark.parametrize(
+    "c1,c2", [("GRETIL", "SARIT"), ("SARIT", "DCS"), ("DCS", "GRETIL"), ("GRETIL", "GRETIL")]
+)
+def test_seti_overlap_matches_bruteforce(spark, catalog, c1, c2):
+    """overlap_response in one tagged collect: the three-way partition of
+    works across two collections, each side restricted to its own."""
+    colls = defaultdict(set)
+    for wid, coll, _, _ in catalog["link_rows"]:
+        colls[wid].add(coll)
+
+    def side(works, keep):
+        rows = [r for r in catalog["link_rows"] if r[1] in keep]
+        return _nested(rows, works)
+
+    want = {
+        "overlap": side({w for w, cs in colls.items() if {c1, c2} <= cs}, {c1, c2}),
+        f"only_in_{c1}": side({w for w, cs in colls.items() if c1 in cs and c2 not in cs}, {c1}),
+        f"only_in_{c2}": side({w for w, cs in colls.items() if c2 in cs and c1 not in cs}, {c2}),
+    }
+    got, jobs = count_jobs(spark, lambda: serving.overlap_response(catalog["links"], c1, c2))
+    assert got == want
+    assert jobs <= 6
